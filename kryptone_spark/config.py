@@ -116,6 +116,10 @@ class CrawlConfig:
     # None = auto: on (8 salt buckets) whenever the per-domain budget is
     # finite — exactly the case where one domain holding most of the
     # frontier would otherwise rank in a single task; 0/1 disables.
+    # politeness_schedule adds the salted phase only for budgets above
+    # spark.sql.optimizer.windowGroupLimitThreshold (default 1000) or
+    # with that threshold at -1: within it, Spark's map-side partial
+    # top-k (WindowGroupLimit) already bounds the hot domain's task.
     salt_buckets: int | None = None
 
     # crawl-trap defense (engine-only; the reference admits every

@@ -39,6 +39,8 @@ from decimal import Decimal as _Decimal
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kryptone_spark.session import literal_frame
+
 # monotonically_increasing_id() = (partition_id << 33) + row_index;
 # the low 33 bits are the row's index within its partition, assigned
 # in physical stream order (valid below 2^33 ≈ 8.6e9 rows/partition)
@@ -82,8 +84,8 @@ def _offsets_df(df: DataFrame, counts: dict[int, int], base) -> DataFrame:
     for pid in sorted(counts):
         offsets.append((int(pid), float(acc) if is_float else int(acc)))
         acc += counts[pid]
-    return df.sparkSession.createDataFrame(
-        offsets, f"__pid int, __off {'double' if is_float else 'long'}"
+    return literal_frame(
+        df.sparkSession, offsets, f"__pid int, __off {'double' if is_float else 'long'}"
     )
 
 

@@ -16,11 +16,12 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kryptone_spark.config import CrawlConfig
 from kryptone_spark.functions import urls as U
+from kryptone_spark.session import literal_frame
 
 EPOCH = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
 
@@ -53,6 +54,14 @@ def with_robots(pending: DataFrame, robots: DataFrame | None, config: CrawlConfi
         )
         .drop("__disallow", "__rdelay")
     )
+
+
+def _partial_topk_planned(spark: SparkSession, budget: int) -> bool:
+    """Does Spark plan a map-side partial top-k for ``row_number() <=
+    budget``? InsertWindowGroupLimit fires for 0 < limit ≤
+    ``spark.sql.optimizer.windowGroupLimitThreshold``; -1 turns it off."""
+    threshold = int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
+    return 0 < budget <= threshold
 
 
 def politeness_schedule(
@@ -88,6 +97,14 @@ def politeness_schedule(
     stored bucketed by ``domain_bucket`` (W4 salting), so this shuffle
     moves only the wave's pending slice, and AQE splits any hot-domain
     partition (skew-join handling is on in session.py).
+
+    ``salt_buckets > 1`` asks for the hot-domain bound on the ranking
+    task. With a budget ≤ ``spark.sql.optimizer.windowGroupLimitThreshold``
+    (default 1000) Spark's map-side ``WindowGroupLimit … Partial``
+    already gives it, so the plan keeps ONE exchange and no salt is
+    added; above the threshold, or with it at -1, a salted phase-1
+    top-k runs first (two exchanges). The output is the same either
+    way.
     """
     pending = with_robots(pending, robots, config)
     # Heritrix-style error backoff: ``domain_backoff`` (domain,
@@ -129,18 +146,26 @@ def politeness_schedule(
         blocked = blocked.unionByName(exhausted.select(blocked.columns))
         ok = ok.where(F.col("__nf") < cap)
 
-    # Two-phase top-k for hot-domain skew (salt_buckets > 0): AQE's
+    # Two-phase top-k for hot-domain skew (salt_buckets > 1): AQE's
     # skew handling splits joins, not windows, so a domain holding most
     # of the frontier would rank in ONE task. Phase 1 ranks within
     # (domain, salt) partitions and keeps each salt's local budget —
     # the true per-domain top-k is a subset of the union of salted
     # top-ks — so the exact phase-2 window sees ≤ salt_buckets × budget
     # rows per domain instead of the domain's whole pending set.
+    # Within windowGroupLimitThreshold Spark plans that bound itself (a
+    # map-side ``WindowGroupLimit … Partial`` under the domain exchange
+    # leaves the hot domain's ranking task ≤ map partitions × budget
+    # rows), and phase 1 would be a pure extra shuffle + sort; so would
+    # it under the default budget (1e9 = CrawlConfig's effectively-
+    # unbounded sentinel), where a salted window filters nothing.
     budget = config.max_per_domain_per_wave
-    # the default budget (1e9 = CrawlConfig's effectively-unbounded
-    # sentinel) must skip phase 1: a salted window that filters nothing
-    # is a pure extra shuffle
-    if salt_buckets > 1 and budget < 1_000_000_000:
+    spark = pending.sparkSession
+    if (
+        salt_buckets > 1
+        and budget < 1_000_000_000
+        and not _partial_topk_planned(spark, budget)
+    ):
         w_salt = Window.partitionBy("domain", "__salt").orderBy("priority", "url")
         ok = (
             ok.withColumn(
@@ -153,7 +178,7 @@ def politeness_schedule(
 
     w_dom = Window.partitionBy("domain").orderBy("priority", "url")
     ranked = ok.withColumn("rank_in_domain", F.row_number().over(w_dom))
-    batch = ranked.where(F.col("rank_in_domain") <= config.max_per_domain_per_wave)
+    batch = ranked.where(F.col("rank_in_domain") <= budget)
     if cap is not None:
         # this wave takes only the domain's remaining quota
         batch = batch.where(
@@ -168,10 +193,13 @@ def politeness_schedule(
     # crawl — codegen caches key on source text, and Literal codegen
     # inlines primitives). A broadcast 1-row dim ships them as DATA:
     # the generated source references input columns and stays
-    # wave-invariant, so the class compiles once per crawl. The join
-    # is against the post-budget batch (≤ budget rows/domain), never
-    # the full frontier, so no shuffle row widens.
-    scalars = pending.sparkSession.createDataFrame(
+    # wave-invariant, so the class compiles once per crawl. The dim is
+    # a LocalRelation (session.literal_frame), so building it starts no
+    # Python-worker job. The join is against the post-budget batch
+    # (≤ budget rows/domain), never the full frontier, so no shuffle
+    # row widens.
+    scalars = literal_frame(
+        spark,
         [(float(EPOCH.timestamp() + wave_start_offset), int(wave))],
         "__wave_t0 double, __wave int",
     )

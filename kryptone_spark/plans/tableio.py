@@ -10,7 +10,8 @@ partitioned Parquet directories:
   wave overwrites exactly that subdirectory (write-once per wave ≙ the
   reference's whole-cache JSON dump, /root/reference/kryptone/base.py:562-575,
   but append-only and partition-pruned instead of O(frontier) rewrites).
-- ``read(name)`` — union of all committed waves.
+- ``read(name)`` — union of all committed waves (the same set
+  ``committed_waves`` reports: a wave dir without ``_SUCCESS`` is torn).
 - ``committed_waves(name)`` — resume point discovery.
 
 Swapping in Iceberg is a 1:1 adapter: ``write_wave`` → ``MERGE INTO`` /
@@ -178,12 +179,16 @@ class TableIO:
             if needs_filter:
                 df = df.where(F.col("wave").isin(own))
             parts.append(df)
-        # an all-empty wave dir (e.g. no robots-blocked rows yet) has a
-        # _SUCCESS marker but no part files — nothing to read from it
+        # only committed dirs, exactly as committed_waves counts them: a
+        # crash between task commit and job commit leaves part files but
+        # no _SUCCESS. An all-empty wave dir (e.g. no robots-blocked
+        # rows yet) has a _SUCCESS marker but no part files — nothing to
+        # read from it
         live = [
             p
             for p in self._wave_dirs(name)
-            if next(p.rglob("*.parquet"), None) is not None
+            if (p / "_SUCCESS").exists()
+            and next(p.rglob("*.parquet"), None) is not None
         ]
         if live:
             r = self.spark.read.option("basePath", str(base))
@@ -203,7 +208,7 @@ class TableIO:
                 df = self._read_gen(p)
                 return df.where(F.col("wave") == wave) if df is not None else None
         path = self._dir(name) / f"wave={wave}"
-        if not path.exists():
+        if not (path / "_SUCCESS").exists():
             return None
         return self.spark.read.option("basePath", str(self._dir(name))).parquet(
             str(path)

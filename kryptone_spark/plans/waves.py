@@ -47,6 +47,7 @@ from kryptone_spark.config import CrawlConfig
 from kryptone_spark.operators import admission, schedule
 from kryptone_spark.plans.lineage_cut import checkpoint_cut
 from kryptone_spark.plans.tableio import TableIO
+from kryptone_spark.sources.seeds import from_list
 
 
 @dataclass
@@ -381,7 +382,7 @@ class WaveRunner:
         """before_start (base.py:1006-1051): admit the seed list with
         the home page allowed (iteration_count == 0)."""
         seeds = list(dict.fromkeys(self.config.start_urls))
-        df = self.spark.createDataFrame([(u,) for u in seeds], "url string")
+        df = from_list(self.spark, seeds)
         # Eager checkpoint: without it the seed arm of the frontier
         # union carries the FULL admission expression tree, and every
         # wave's schedule plan re-optimizes over it — predicate

@@ -7,8 +7,11 @@ a real cluster via ``spark-submit --py-files`` (see bench/README).
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def get_spark(
@@ -40,4 +43,45 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
+    )
+
+
+def literal_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: str
+) -> DataFrame:
+    """A small driver-built frame planned as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list, ...)`` ships pickled rows through a
+    Python RDD: the plan is ``Scan ExistingRDD`` and every job over it
+    starts Python workers on all slots — 0.3-0.4 s of wall for a
+    one-row frame on a 4-core ``local[4]`` session. This builds a parameterized ``VALUES`` query
+    instead: the values are BOUND as literals (never formatted into
+    SQL, so doubles stay exact and URLs need no quoting), the optimizer
+    folds the whole thing into one ``LocalTableScan``, and the values
+    travel as data, never as generated source.
+
+    ``schema`` is a DDL string; every column is cast to it and is
+    nullable, as with ``createDataFrame``. A trailing all-NULL row
+    types the columns even for an empty ``rows`` and is cut by the
+    limit. Binding costs one py4j call per value, so this is for
+    driver-sized lists (≤ ~10^3 rows); larger inputs belong in a file
+    (``sources.seeds.load_start_urls``)."""
+    fields = _parse_datatype_string(schema)
+    if not isinstance(fields, StructType):
+        raise ValueError(f"literal_frame needs a DDL struct schema, got {schema!r}")
+    n = len(fields.fields)
+    # NAMED markers: Spark 4.1 binds positional '?' markers of a VALUES
+    # list out of order once there are more than four of them
+    values = [
+        "(" + ", ".join(f":p{i}_{j}" for j in range(n)) + ")"
+        for i in range(len(rows))
+    ]
+    values.append("(" + ", ".join(["NULL"] * n) + ")")
+    args = {f"p{i}_{j}": v for i, r in enumerate(rows) for j, v in enumerate(r)}
+    cols = ", ".join(f"c{j}" for j in range(n))
+    df = spark.sql(
+        f"SELECT * FROM VALUES {', '.join(values)} AS t({cols})", args=args
+    )
+    return df.limit(len(rows)).select(
+        *[F.col(f"c{i}").cast(f.dataType).alias(f.name) for i, f in enumerate(fields.fields)]
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kryptone_spark.plans.tableio import TableIO
+from kryptone_spark.sources.seeds import from_list
 
 
 def export_seen_csv(io: TableIO, path: str) -> None:
@@ -69,7 +70,7 @@ def export_cache_json(io: TableIO, path: str, max_rows: int = 1_000_000) -> None
                  "urls_to_visit": [], "visited_urls": []}, f, indent=2)
         return
     spark = (visited_t or frontier).sparkSession
-    empty = spark.createDataFrame([], "url string")
+    empty = from_list(spark, [])
     visited = visited_t.select("url") if visited_t is not None else empty
     pending = (
         frontier.join(visited, "url", "left_anti").select("url")

@@ -12,10 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kryptone_spark.session import literal_frame
+
 
 def from_list(spark: SparkSession, urls: list[str]) -> DataFrame:
-    """S1 — Meta.start_urls literal list (base.py:66-67)."""
-    return spark.createDataFrame([(u,) for u in urls], "url string")
+    """S1 — Meta.start_urls literal list (base.py:66-67), as a
+    ``LocalRelation`` (no Python-worker job; ``session.literal_frame``)."""
+    return literal_frame(spark, [(u,) for u in urls], "url string")
 
 
 def load_start_urls(
@@ -49,7 +52,7 @@ def query_generator(
     over a numeric range, keeping extra fixed params."""
     extra = "".join(f"&{k}={v}" for k, v in (query or {}).items())
     if (end_value - initial_value) * (1 if step >= 0 else -1) < 0:
-        return spark.createDataFrame([], "url string")
+        return from_list(spark, [])
     return spark.range(1).select(
         F.explode(F.sequence(F.lit(initial_value), F.lit(end_value), F.lit(step))).alias("v")
     ).select(
@@ -68,7 +71,7 @@ def path_generator(
     if k <= 0:
         # sequence(start, start-1) would default to step -1 and emit
         # [start, start-1] — two bogus seeds from a generate-nothing ask
-        return spark.createDataFrame([], "url string")
+        return from_list(spark, [])
     return spark.range(1).select(
         F.explode(F.sequence(F.lit(start), F.lit(start + k - 1))).alias("v")
     ).select(

@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from kryptone_spark.functions import urls as U
 from kryptone_spark.plans.lineage_cut import checkpoint_cut
 from kryptone_spark.plans.tableio import TableIO
+from kryptone_spark.sources.seeds import from_list
 
 FETCH_RESULT = T.StructType(
     [
@@ -187,9 +188,8 @@ def run_crawl_ingest(
     state: dict = {"seen": None, "visited": None, "any_fetched": False}
 
     def _seed() -> None:
-        spark = documents.sparkSession
         seeds = list(dict.fromkeys(config.start_urls))
-        df = spark.createDataFrame([(u,) for u in seeds], "url string")
+        df = from_list(documents.sparkSession, seeds)
         admitted = admission.admit(df, config, allow_home=True)
         rows = admitted.select(
             "url", "domain_bucket",

@@ -50,3 +50,21 @@ def test_collect_only_in_declared_places():
         if ".collect()" in f.read_text():
             got.add(str(f.relative_to(PKG.parent)))
     assert got <= allowed_files, got - allowed_files
+
+
+def test_no_python_built_frames_on_the_wave_path():
+    """A ``createDataFrame`` over a driver list plans as ``Scan
+    ExistingRDD`` and starts Python workers on every slot for each job
+    that reads it (0.3-0.4 s of wall for one row on a 4-core
+    ``local[4]`` session). The wave path builds its literal frames
+    (wave scalars, rank offsets, seeds) with ``session.literal_frame``,
+    a JVM ``LocalRelation``, instead."""
+    files = [
+        "plans/waves.py",
+        "operators/schedule.py",
+        "functions/rank.py",
+        "streaming/ingest.py",
+        "sources/seeds.py",
+    ]
+    offenders = [f for f in files if "createDataFrame(" in (PKG / f).read_text()]
+    assert not offenders, offenders

@@ -8,6 +8,9 @@ stages, and no Python evaluation nodes in the data path.
 
 from __future__ import annotations
 
+import contextlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,6 +25,12 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """(operator, detail block) per numbered node of a formatted plan."""
+    blocks = re.split(r"(?m)^\(\d+\) ", plan)[1:]
+    return [(b.split("\n", 1)[0].split(" [codegen")[0], b) for b in blocks]
 
 
 @pytest.fixture(scope="module")
@@ -107,29 +116,114 @@ def test_admission_is_map_only_no_shuffle(spark):
     assert len(codegen_spans) == 2, codegen_spans
 
 
-def test_politeness_schedule_single_exchange(spark):
-    """The W1 window costs exactly one hash exchange on domain
-    (unsalted form); salting adds exactly one more."""
-    frontier = spark.range(1000).select(
-        F.concat(F.lit("http://site"), (F.col("id") % 5), F.lit(".test/p-"), F.col("id")).alias("url"),
-        F.concat(F.lit("site"), (F.col("id") % 5), F.lit(".test")).alias("domain"),
+def _toy_frontier(spark, n=1000, n_domains=5):
+    return spark.range(n).select(
+        F.concat(F.lit("http://site"), (F.col("id") % n_domains), F.lit(".test/p-"), F.col("id")).alias("url"),
+        F.concat(F.lit("site"), (F.col("id") % n_domains), F.lit(".test")).alias("domain"),
         F.lit(0).alias("domain_bucket"),
         F.lit(0).alias("depth"),
         F.lit(0).alias("discovered_wave"),
         F.lit(0.0).alias("priority"),
     )
-    import re
 
-    def n_exchanges(df) -> int:
-        return len(re.findall(r"\(\d+\) Exchange", plan_of(df)))
 
-    config = CrawlConfig(max_per_domain_per_wave=10, wait_time=1.0)
-    batch, _ = schedule.politeness_schedule(frontier, config, wave=0, global_rank=False)
-    assert n_exchanges(batch) == 1
-    salted, _ = schedule.politeness_schedule(
-        frontier, config, wave=0, global_rank=False, salt_buckets=8
+@contextlib.contextmanager
+def window_group_limit_threshold(spark, value):
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_politeness_schedule_salting_vs_window_group_limit(spark):
+    """The W1 window costs exactly one hash exchange on domain. With a
+    budget within windowGroupLimitThreshold, ``salt_buckets`` adds
+    nothing: Spark's map-side partial top-k sits under that exchange
+    and already bounds the hot domain's ranking task. Above the
+    threshold, or with WindowGroupLimit off (-1), salting adds exactly
+    one more exchange and no partial top-k is planned."""
+    frontier = _toy_frontier(spark)
+
+    def shape(budget, salt):
+        config = CrawlConfig(max_per_domain_per_wave=budget, wait_time=1.0)
+        batch, _ = schedule.politeness_schedule(
+            frontier, config, wave=0, global_rank=False, salt_buckets=salt
+        )
+        # bottom-up operator order, as the formatted plan numbers them
+        return [
+            f"{op} Partial" if op == "WindowGroupLimit" and "Partial\n" in detail else op
+            for op, detail in plan_nodes(plan_of(batch))
+            if op in ("Exchange", "WindowGroupLimit", "Window")
+        ]
+
+    for salt in (0, 8):
+        got = shape(10, salt)
+        assert got.count("Exchange") == 1, (salt, got)
+        assert got.index("WindowGroupLimit Partial") < got.index("Exchange"), got
+    for threshold in (5, -1):
+        with window_group_limit_threshold(spark, threshold):
+            got = shape(10, 8)
+            assert got == ["Exchange", "Window", "Exchange", "Window"], (threshold, got)
+            assert shape(10, 0) == ["Exchange", "Window"], threshold
+
+
+def test_politeness_schedule_wave_invariant_codegen(spark):
+    """Waves 2 and 3 of the schedule compile NO new Janino classes
+    after wave 1 (the wave id and clock offset ride a data dim, not
+    generated source), and that dim is a JVM LocalTableScan: building
+    it starts no Python-worker job (a createDataFrame dim plans as
+    ``Scan ExistingRDD``)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    frontier = _toy_frontier(spark, n=2000, n_domains=7)
+    robots = spark.sql(
+        "SELECT * FROM VALUES ('site3.test', array('/p-1'), 2.0) "
+        "AS t(domain, disallow, crawl_delay)"
     )
-    assert n_exchanges(salted) == 2
+    config = CrawlConfig(max_per_domain_per_wave=20, wait_time=1.0)
+    compiled = []
+    for wave, offset in ((1, 0.0), (2, 37.5), (3, 1234.25)):
+        batch, blocked = schedule.politeness_schedule(
+            frontier, config, wave=wave, robots=robots,
+            wave_start_offset=offset, salt_buckets=8,
+        )
+        rows = batch.select("wave", "fetch_at").distinct().collect()
+        blocked.write.format("noop").mode("overwrite").save()
+        assert {r["wave"] for r in rows} == {wave}
+        compiled.append(codegen.METRIC_COMPILATION_TIME().getCount())
+    assert compiled[2] == compiled[0], compiled
+    # the global rank checkpoints the batch, hiding the dim below an
+    # RDD scan (whose offsets dim is itself a LocalTableScan): plan the
+    # last wave without it to see the scalar dim's leaf
+    assert "LocalTableScan" in plan_of(batch)
+    batch, _ = schedule.politeness_schedule(
+        frontier, config, wave=3, robots=robots, wave_start_offset=1234.25,
+        global_rank=False, salt_buckets=8,
+    )
+    dim = [op for op, detail in plan_nodes(plan_of(batch)) if "Output [2]: [__wave_t0" in detail]
+    assert dim == ["LocalTableScan"], dim
+
+
+def test_literal_frame_is_a_local_relation(spark):
+    """Driver-built frames keep row order (more than four rows: Spark
+    binds positional VALUES markers out of order), exact doubles and
+    unquoted strings, plan as one LocalTableScan, and an empty list
+    still carries the declared, nullable schema."""
+    from kryptone_spark.session import literal_frame
+
+    rows = [
+        (i, 1704067200.0 + i / 3, f"http://a.test/p{i}?q='x\"y\\z")
+        for i in range(12)
+    ]
+    df = literal_frame(spark, rows, "n int, t double, url string")
+    assert [tuple(r) for r in df.collect()] == rows
+    assert [op for op, _ in plan_nodes(plan_of(df))] == ["LocalTableScan"]
+    empty = literal_frame(spark, [], "url string, wave int")
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == "struct<url:string,wave:int>"
+    assert all(f.nullable for f in df.schema.fields + empty.schema.fields)
 
 
 def test_seen_antijoin_no_python(spark, entry):
@@ -157,6 +251,14 @@ def test_torn_write_is_not_committed(spark, tmp_path):
     torn.mkdir(parents=True)
     (torn / "_temporary").mkdir()
     assert io.committed_waves("lineage") == [0, 1]
+    # a torn wave whose tasks already committed part files (the crash
+    # landed between task commit and job commit): read() must agree
+    # with committed_waves and not surface its rows
+    io.write_wave("lineage", df, 3)
+    (tmp_path / "t" / "lineage" / "wave=3" / "_SUCCESS").unlink()
+    assert io.committed_waves("lineage") == [0, 1]
+    got = io.read("lineage")
+    assert sorted(r["wave"] for r in got.select("wave").collect()) == [0, 1]
 
 
 def test_incremental_dedup_probe_plan(spark):
