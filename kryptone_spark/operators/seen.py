@@ -11,35 +11,28 @@ false negatives are impossible (tests pin this property).
 
 Layout: one bloom per domain_bucket, built executor-side with
 ``applyInPandas`` over JVM-computed xxhash64 columns (no Python object
-hashing), OR-able across waves for incremental maintenance. Two probe
-paths with identical semantics (tests pin equality):
-
-- **broadcast** (small scale): the sidecar rows are collected and
-  broadcast as a dict; the probe is a pandas UDF over the candidate
-  stream — no shuffle of candidates.
-- **table-backed** (10^10 scale): the sidecar stays a DataFrame
-  (persistable via TableIO); candidates are cogrouped with the sidecar
-  on domain_bucket, so each task holds only its own buckets' filter
-  bits and nothing flows through the driver. At 10^10 seen ×
-  12 bits/key the sidecar is ~15 GB of bits — far past any broadcast.
-
-``bloom_prefilter`` picks the path by sidecar type (list = broadcast,
-DataFrame = table) and ``BLOOM_BROADCAST_MAX_BYTES`` gates the
-list path: building a sidecar bigger than the gate returns a DataFrame
-instead.
+hashing), OR-able across waves for incremental maintenance. The
+sidecar is a DataFrame (persistable via TableIO / parquet partitioned
+on domain_bucket); candidates are cogrouped with it on domain_bucket,
+so each task holds only its own buckets' filter bits and nothing flows
+through the driver — at 10^10 seen × 12 bits/key the sidecar is
+~15 GB of bits. The cuckoo variant below has the same layout and probe
+shape, and adds generation-stamped tombstones for re-crawl windows.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kryptone_spark.config import CrawlConfig
 from kryptone_spark.functions import urls as U
+from kryptone_spark.functions.cuckoo import CuckooFilter
 from kryptone_spark.operators import admission
+from kryptone_spark.plans.lineage_cut import checkpoint_cut
 
 _SIDECAR_SCHEMA = T.StructType(
     [
@@ -57,36 +50,24 @@ def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
     return (h1[None, :] + i * h2[None, :]) % np.uint64(m)
 
 
-# broadcast-path ceiling: past this many filter bytes the sidecar must
-# live as a table (bucket-join probe), not a driver dict — at 10^10
-# seen keys x 12 bits the bits alone are ~15 GB
-BLOOM_BROADCAST_MAX_BYTES: int = 512 << 20
-
-# broadcasts created by probe_bloom/probe_cuckoo this session; the wave
-# loop releases them after each wave so executor copies don't pile up
-# O(#waves) (a released broadcast is re-shipped automatically if a lazy
-# plan re-executes the probe — unpersist, never destroy)
-_LIVE_BROADCASTS: list = []
-
-
-def release_bloom_broadcasts() -> None:
-    for bc in _LIVE_BROADCASTS:
-        try:
-            bc.unpersist(blocking=False)
-        except Exception:
-            pass
-    _LIVE_BROADCASTS.clear()
-
-
-def _sidecar_df(
+def build_bloom_sidecar_table(
     seen: DataFrame,
     config: CrawlConfig,
     bits_per_key: int = 12,
     k: int = 7,
     min_bits: int = 1 << 12,
 ) -> DataFrame:
-    """(domain_bucket, m, k, bits) bloom rows. Hashing happens JVM-side
-    (xxhash64 with two seeds); the pandas stage only sets bits."""
+    """(domain_bucket, m, k, bits) bloom rows as a DataFrame that never
+    touches the driver — persist via TableIO / parquet partitioned on
+    domain_bucket and probe with probe_bloom_table's bucket cogroup.
+    Hashing happens JVM-side (xxhash64 with two seeds); the pandas
+    stage only sets bits.
+
+    Incremental maintenance: a sidecar is an append-only collection of
+    per-bucket blooms and probing ORs across every bloom of a bucket,
+    so merging a wave's delta sidecar is ``unionByName`` — each delta
+    keeps a bloom sized to its own row count. Compact periodically with
+    compact_sidecar_table."""
     hashed = seen.select(
         U.domain_bucket(U.netloc(F.col("url")), config.n_domain_buckets).alias(
             "domain_bucket"
@@ -123,70 +104,7 @@ def _sidecar_df(
     return hashed.groupBy("domain_bucket").applyInPandas(_build, schema=_SIDECAR_SCHEMA)
 
 
-def build_bloom_sidecar(
-    seen: DataFrame,
-    config: CrawlConfig,
-    bits_per_key: int = 12,
-    k: int = 7,
-    min_bits: int = 1 << 12,
-) -> list[dict]:
-    """Small-scale (broadcast-path) sidecar: the bloom rows collected
-    to a list. The BLOOM_BROADCAST_MAX_BYTES ceiling is ENFORCED here —
-    a controlled error beats the driver OOM it would otherwise become;
-    past it, use build_bloom_sidecar_table (bloom_mode='table')."""
-    rows = _sidecar_df(seen, config, bits_per_key, k, min_bits).collect()
-    out = [r.asDict() for r in rows]
-    nbytes = sidecar_bytes(out)
-    if nbytes > BLOOM_BROADCAST_MAX_BYTES:
-        raise ValueError(
-            f"bloom sidecar is {nbytes >> 20} MiB of filter bits — past the "
-            f"{BLOOM_BROADCAST_MAX_BYTES >> 20} MiB broadcast ceiling; use "
-            "bloom_mode='table' (build_bloom_sidecar_table) so the bits "
-            "never touch the driver"
-        )
-    return out
-
-
-def build_bloom_sidecar_table(
-    seen: DataFrame,
-    config: CrawlConfig,
-    bits_per_key: int = 12,
-    k: int = 7,
-    min_bits: int = 1 << 12,
-) -> DataFrame:
-    """Scale-path sidecar: the same (domain_bucket, m, k, bits) rows as
-    a DataFrame that never touches the driver — persist via TableIO /
-    parquet partitioned on domain_bucket and probe with
-    probe_bloom_table's bucket cogroup."""
-    return _sidecar_df(seen, config, bits_per_key, k, min_bits)
-
-
-def sidecar_bytes(sidecar: list[dict]) -> int:
-    """Total filter payload of a list sidecar — compare against
-    BLOOM_BROADCAST_MAX_BYTES before choosing the broadcast path."""
-    return sum(len(r["bits"]) for r in sidecar)
-
-
-def merge_sidecars(a, b):
-    """Incremental maintenance: a sidecar is an append-only collection
-    of per-bucket blooms; probing ORs across every bloom of a bucket,
-    so merging a wave's delta sidecar is concatenation (list path) or
-    union (table path) — no same-size bit-OR needed, each delta keeps a
-    bloom sized to its own row count. Compact periodically with
-    compact_sidecars / compact_sidecar_table."""
-    if isinstance(a, DataFrame) and isinstance(b, DataFrame):
-        return a.unionByName(b)
-    if isinstance(a, DataFrame) or isinstance(b, DataFrame):
-        raise TypeError(
-            "merge_sidecars needs two sidecars of the SAME path — both "
-            "lists (broadcast mode) or both DataFrames (table mode); "
-            f"got {type(a).__name__} + {type(b).__name__}. A crawl "
-            "cannot switch bloom_mode mid-flight without rebuilding."
-        )
-    return list(a) + list(b)
-
-
-def compact_sidecars(sidecar: list[dict]) -> list[dict]:
+def _compact_sidecars(sidecar: list[dict]) -> list[dict]:
     """OR together same-shape blooms of a bucket so probe cost stops
     growing O(#waves) on long crawls. Small per-wave deltas all hit the
     min_bits floor, so they share (m, k) and collapse to one entry;
@@ -209,11 +127,11 @@ def compact_sidecars(sidecar: list[dict]) -> list[dict]:
 
 
 def compact_sidecar_table(sidecar: DataFrame) -> DataFrame:
-    """Table-path twin of compact_sidecars: one shuffle on
-    domain_bucket, same same-(m,k)-OR semantics."""
+    """Same-(m, k) OR compaction of a bloom sidecar: one shuffle on
+    domain_bucket, then _compact_sidecars per bucket."""
 
     def _compact(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = compact_sidecars(pdf.to_dict("records"))
+        rows = _compact_sidecars(pdf.to_dict("records"))
         return pd.DataFrame(rows, columns=["domain_bucket", "m", "k", "bits"])
 
     return sidecar.groupBy("domain_bucket").applyInPandas(
@@ -221,23 +139,81 @@ def compact_sidecar_table(sidecar: DataFrame) -> DataFrame:
     )
 
 
-def _bloom_hits(
-    cand: pd.DataFrame, entries: list[tuple[np.ndarray, int, int]]
-) -> np.ndarray:
+def _bloom_hits(cand: pd.DataFrame, side: pd.DataFrame) -> np.ndarray:
     """Vectorized membership of cand's (h1, h2) against a bucket's
-    bloom entries — shared by both probe paths so their semantics
-    cannot drift."""
+    bloom rows: a key is maybe-seen if ANY of them hits."""
     a1 = cand["__h1"].to_numpy().astype(np.uint64)
     a2 = cand["__h2"].to_numpy().astype(np.uint64) | np.uint64(1)
     hit_any = np.zeros(len(cand), dtype=bool)
-    for bits, m, k in entries:
-        pos = _positions(a1, a2, k, m)
+    for r in side.to_dict("records"):
+        bits = np.frombuffer(r["bits"], dtype=np.uint8)
+        k = int(r["k"])
+        pos = _positions(a1, a2, k, int(r["m"]))
         hit = np.ones(len(cand), dtype=bool)
         for i in range(k):
             p = pos[i]
             hit &= (bits[(p // 8).astype(np.int64)] >> (p % 8).astype(np.uint8)) & 1 == 1
         hit_any |= hit
     return hit_any
+
+
+def _probe_table(
+    candidates: DataFrame,
+    sidecar: DataFrame,
+    config: CrawlConfig,
+    url_col: str,
+    pre_resolved: bool,
+    bucket_col: str | None,
+    hashes: dict[str, Column],
+    member,
+) -> DataFrame:
+    """Shared bucket-cogroup probe: resolves each candidate URL once,
+    projects its bucket and the filter's ``hashes`` (expressions over
+    ``__resolved``), cogroups with the sidecar on domain_bucket and
+    adds ``might_seen = member(cand_pdf, sidecar_pdf)`` per bucket."""
+    if pre_resolved:
+        prep = candidates.withColumn("__resolved", F.col(url_col))
+    else:
+        prep = candidates.select(
+            "*",
+            U.resolve_relative(F.col(url_col), F.lit(_origin_lit(config))).alias(
+                "__resolved"
+            ),
+            # nondeterministic barrier: stops CollapseProject inlining
+            # the dot-segment fold into the hash projections below and
+            # knocking the probe input out of codegen (same pattern as
+            # admission.admit)
+            F.monotonically_increasing_id().alias("__pb"),
+        )
+    bucket = (
+        F.col(bucket_col)
+        if bucket_col is not None
+        else U.domain_bucket(U.netloc(F.col("__resolved")), config.n_domain_buckets)
+    )
+    prep = prep.select(
+        "*",
+        bucket.alias("__bk"),
+        *[expr.alias(name) for name, expr in hashes.items()],
+    ).drop("__resolved", *([] if pre_resolved else ["__pb"]))
+
+    out_fields = list(prep.schema.fields) + [
+        T.StructField("might_seen", T.BooleanType(), False)
+    ]
+    out_cols = [f.name for f in out_fields]
+
+    def _probe(cand: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
+        if len(cand) == 0:
+            return pd.DataFrame(columns=out_cols)
+        out = cand.copy()
+        out["might_seen"] = member(cand, side)
+        return out[out_cols]
+
+    res = (
+        prep.groupBy("__bk")
+        .cogroup(sidecar.groupBy("domain_bucket"))
+        .applyInPandas(_probe, schema=T.StructType(out_fields))
+    )
+    return res.drop("__bk", *hashes)
 
 
 def probe_bloom_table(
@@ -248,17 +224,14 @@ def probe_bloom_table(
     pre_resolved: bool = False,
     bucket_col: str | None = None,
 ) -> DataFrame:
-    """Table-backed probe: candidates cogrouped with the sidecar on
-    domain_bucket. Each task sees only its buckets' filter bits —
-    nothing is collected or broadcast, so the sidecar can be arbitrarily
-    large (10^10-key scale). One shuffle of the candidate slice on
-    domain_bucket; the sidecar side is O(#buckets) rows. Callers should
-    project candidates to the columns they need first — every column
-    rides the Arrow transfer.
-
-    Identical ``might_seen`` semantics to probe_bloom (a key is
-    maybe-seen if ANY of the bucket's blooms hits); tests pin
-    equality of the two paths.
+    """Adds ``might_seen`` (False ⇒ definitely not in seen):
+    candidates cogrouped with the sidecar on domain_bucket. Each task
+    sees only its buckets' filter bits — nothing is collected or
+    broadcast, so the sidecar can be arbitrarily large (10^10-key
+    scale). One shuffle of the candidate slice on domain_bucket; the
+    sidecar side is O(#buckets) rows. Callers should project candidates
+    to the columns they need first — every column rides the Arrow
+    transfer.
 
     Scale fast path: a frontier/candidate table stored the engine way
     already carries resolved URLs and its ``domain_bucket`` partition
@@ -274,108 +247,15 @@ def probe_bloom_table(
     cluster) — the sidecar layout adapts automatically, each bucket's
     bloom just gets proportionally smaller. The sandbox default of 64
     saturates local[32]."""
-    if pre_resolved:
-        prep = candidates.withColumn("__resolved", F.col(url_col))
-    else:
-        prep = candidates.select(
-            "*",
-            U.resolve_relative(F.col(url_col), F.lit(_origin_lit(config))).alias(
-                "__resolved"
-            ),
-            # nondeterministic barrier: stops CollapseProject inlining
-            # the dot-segment fold into the three hash projections
-            # below (same pattern as probe_bloom / admission.admit)
-            F.monotonically_increasing_id().alias("__pb"),
-        )
-    bucket = (
-        F.col(bucket_col)
-        if bucket_col is not None
-        else U.domain_bucket(U.netloc(F.col("__resolved")), config.n_domain_buckets)
+    resolved = F.col("__resolved")
+    return _probe_table(
+        candidates, sidecar, config, url_col, pre_resolved, bucket_col,
+        {
+            "__h1": F.xxhash64(resolved, F.lit(1)),
+            "__h2": F.xxhash64(resolved, F.lit(2)),
+        },
+        _bloom_hits,
     )
-    prep = prep.select(
-        "*",
-        bucket.alias("__bk"),
-        F.xxhash64(F.col("__resolved"), F.lit(1)).alias("__h1"),
-        F.xxhash64(F.col("__resolved"), F.lit(2)).alias("__h2"),
-    ).drop("__resolved", *([] if pre_resolved else ["__pb"]))
-
-    out_fields = list(prep.schema.fields) + [
-        T.StructField("might_seen", T.BooleanType(), False)
-    ]
-    out_schema = T.StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-
-    def _probe(cand: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        if len(cand) == 0:
-            return pd.DataFrame(columns=out_cols)
-        entries = [
-            (np.frombuffer(r["bits"], dtype=np.uint8), int(r["m"]), int(r["k"]))
-            for r in side.to_dict("records")
-        ]
-        out = cand.copy()
-        out["might_seen"] = _bloom_hits(cand, entries)
-        return out[out_cols]
-
-    res = (
-        prep.groupBy("__bk")
-        .cogroup(sidecar.groupBy("domain_bucket"))
-        .applyInPandas(_probe, schema=out_schema)
-    )
-    return res.drop("__bk", "__h1", "__h2")
-
-
-def probe_bloom(
-    candidates: DataFrame,
-    sidecar: list[dict],
-    config: CrawlConfig,
-    url_col: str = "url",
-) -> DataFrame:
-    """Adds ``might_seen``: False ⇒ definitely not in seen. A bucket
-    may carry several blooms (one per merged delta) — a key is
-    maybe-seen if ANY of them hits."""
-    spark = candidates.sparkSession
-    blooms: dict[int, list[tuple[np.ndarray, int, int]]] = {}
-    for r in sidecar:
-        blooms.setdefault(int(r["domain_bucket"]), []).append(
-            (np.frombuffer(r["bits"], dtype=np.uint8), int(r["m"]), int(r["k"]))
-        )
-    bc = spark.sparkContext.broadcast(blooms)
-    _LIVE_BROADCASTS.append(bc)
-
-    @F.pandas_udf(T.BooleanType())
-    def _probe(bucket: pd.Series, h1: pd.Series, h2: pd.Series) -> pd.Series:
-        table = bc.value
-        out = np.zeros(len(bucket), dtype=bool)
-        b = bucket.to_numpy()
-        cand = pd.DataFrame({"__h1": h1, "__h2": h2})
-        for bk in np.unique(b):
-            entries = table.get(int(bk))
-            idx = np.where(b == bk)[0]
-            if not entries:
-                continue  # no bloom for bucket ⇒ definitely new
-            out[idx] = _bloom_hits(cand.iloc[idx], entries)
-        return pd.Series(out)
-
-    # materialize the resolved url ONCE behind a nondeterministic
-    # barrier (same pattern as admission.admit): referencing the
-    # resolve expression three times below would let CollapseProject
-    # inline its dot-segment fold into the hash projection and knock
-    # the whole probe input out of codegen
-    prep = candidates.select(
-        "*",
-        U.resolve_relative(F.col(url_col), F.lit(_origin_lit(config))).alias(
-            "__resolved"
-        ),
-        F.monotonically_increasing_id().alias("__pb"),
-    )
-    return prep.withColumn(
-        "might_seen",
-        _probe(
-            U.domain_bucket(U.netloc(F.col("__resolved")), config.n_domain_buckets),
-            F.xxhash64(F.col("__resolved"), F.lit(1)),
-            F.xxhash64(F.col("__resolved"), F.lit(2)),
-        ),
-    ).drop("__resolved", "__pb")
 
 
 def _origin_lit(config: CrawlConfig) -> str:
@@ -391,27 +271,22 @@ def bloom_prefilter(
     links: DataFrame,
     seen_urls: DataFrame,
     config: CrawlConfig,
+    sidecar: DataFrame,
     visited: DataFrame | None = None,
     allow_home: bool | str = False,
-    sidecar: list[dict] | DataFrame | None = None,
 ) -> DataFrame:
     """Admission with bloom-prefiltered membership joins: candidates the
     bloom clears ("definitely new") skip the seen/visited joins entirely
     (visited ⊆ seen, so clearing seen clears visited too). Identical
     output to plain ``admission.admit`` — tests pin equality.
 
-    Pass ``sidecar`` (maintained incrementally with merge_sidecars over
-    per-wave seen DELTAS) to avoid rebuilding the whole sidecar from
-    the full seen set — the rebuild is O(|seen|) per call, exactly the
-    cost the bloom exists to avoid. A list sidecar probes via
-    broadcast; a DataFrame sidecar probes via the table-backed bucket
-    cogroup (the 10^10 path — nothing through the driver)."""
-    if sidecar is None:
-        sidecar = build_bloom_sidecar(seen_urls, config)
-    if isinstance(sidecar, DataFrame):
-        probed = probe_bloom_table(links, sidecar, config)
-    else:
-        probed = probe_bloom(links, sidecar, config)
+    ``sidecar`` is maintained incrementally (``unionByName`` of per-wave
+    delta sidecars built over seen DELTAS), never rebuilt from the full
+    seen set — the rebuild is O(|seen|) per call, exactly the cost the
+    bloom exists to avoid."""
+    # both branches below read the probe: the cut makes its Python
+    # cogroup run once instead of once per branch
+    probed = probe_bloom_table(links, sidecar, config).transform(checkpoint_cut)
     maybe = probed.where(F.col("might_seen")).drop("might_seen")
     fresh = probed.where(~F.col("might_seen")).drop("might_seen")
     a_maybe = admission.admit(
@@ -429,20 +304,13 @@ def bloom_prefilter(
 # cuckoo variant — deletable membership for re-crawl windows
 # ---------------------------------------------------------------------------
 
-_CUCKOO_SCHEMA = T.StructType(
-    [
-        T.StructField("domain_bucket", T.IntegerType(), False),
-        T.StructField("bits", T.BinaryType(), False),
-    ]
-)
-
-# table-path cuckoo sidecar rows: kind='filter' carries cuckoo table
-# bytes; kind='tombstone' carries a uint64 array of expired xxhash64
-# keys. gen orders them: a key is seen iff some filter row with
-# gen > (its latest tombstone's gen, or -1) contains it — so expiry
-# never shadows a later re-insert, and tombstones delete by EXACT
-# 64-bit key (no fingerprint-collision false negatives for other keys,
-# unlike in-place delete_many across multiple delta filters).
+# cuckoo sidecar rows: kind='filter' carries cuckoo table bytes;
+# kind='tombstone' carries a uint64 array of expired xxhash64 keys. gen
+# orders them: a key is seen iff some filter row with gen > (its latest
+# tombstone's gen, or -1) contains it — so expiry never shadows a later
+# re-insert, and tombstones delete by EXACT 64-bit key (no fingerprint-
+# collision false negatives for other keys, unlike in-place delete_many
+# across multiple delta filters).
 _CUCKOO_TABLE_SCHEMA = T.StructType(
     [
         T.StructField("domain_bucket", T.IntegerType(), False),
@@ -453,12 +321,19 @@ _CUCKOO_TABLE_SCHEMA = T.StructType(
 )
 
 
-def _cuckoo_df(seen: DataFrame, config: CrawlConfig) -> DataFrame:
-    """(domain_bucket, bits) cuckoo rows, built executor-side over
-    JVM-computed xxhash64 keys — shared by the broadcast and table
-    builders so the two paths cannot drift."""
-    from kryptone_spark.functions.cuckoo import CuckooFilter
-
+def build_cuckoo_sidecar_table(
+    seen: DataFrame, config: CrawlConfig, gen: int = 0
+) -> DataFrame:
+    """One cuckoo filter per domain_bucket over the seen set, as
+    (domain_bucket, kind, gen, bits) rows built executor-side over
+    JVM-computed xxhash64 keys — the DataFrame never touches the
+    driver. Persist via TableIO / parquet partitioned on domain_bucket,
+    probe with probe_cuckoo_table, expire with expire_urls_table.
+    Incremental maintenance is unionByName of per-wave delta sidecars
+    built at increasing ``gen`` (probe ORs across a bucket's filter
+    rows, gen-gated against its tombstones). Compaction = rebuild from
+    the compacted seen table (the exact state already has expired rows
+    anti-joined out — plans/tableio.py), which also drops tombstones."""
     hashed = seen.select(
         U.domain_bucket(U.netloc(F.col("url")), config.n_domain_buckets).alias(
             "domain_bucket"
@@ -483,69 +358,28 @@ def _cuckoo_df(seen: DataFrame, config: CrawlConfig) -> DataFrame:
                 break
             cap *= 2
         return pd.DataFrame(
-            {"domain_bucket": [int(pdf["domain_bucket"].iloc[0])], "bits": [f.to_bytes()]}
+            {
+                "domain_bucket": [int(pdf["domain_bucket"].iloc[0])],
+                "kind": ["filter"],
+                "gen": [int(gen)],
+                "bits": [f.to_bytes()],
+            }
         )
 
-    return hashed.groupBy("domain_bucket").applyInPandas(_build, _CUCKOO_SCHEMA)
-
-
-def build_cuckoo_sidecar(seen: DataFrame, config: CrawlConfig) -> dict[int, bytes]:
-    """One cuckoo filter per domain_bucket over the seen set. Unlike the
-    bloom sidecar it supports DELETES (expire_urls), enabling re-crawl
-    windows without rebuilding membership state.
-
-    Broadcast-path builder: the filter bytes are collected into a
-    driver dict, so the same BLOOM_BROADCAST_MAX_BYTES ceiling the
-    bloom path enforces applies — at 10^10 seen keys the cuckoo table
-    (uint16 fingerprint x 4 slots / key at ~0.5 load) is ~2 bytes/key
-    of occupied slots and far past any broadcast; use
-    build_cuckoo_sidecar_table + probe_cuckoo_table instead."""
-    rows = _cuckoo_df(seen, config).collect()
-    out = {int(r["domain_bucket"]): bytes(r["bits"]) for r in rows}
-    nbytes = sum(len(b) for b in out.values())
-    if nbytes > BLOOM_BROADCAST_MAX_BYTES:
-        raise ValueError(
-            f"cuckoo sidecar is {nbytes >> 20} MiB of filter bits — past the "
-            f"{BLOOM_BROADCAST_MAX_BYTES >> 20} MiB broadcast ceiling; use "
-            "build_cuckoo_sidecar_table + probe_cuckoo_table so the bits "
-            "never touch the driver"
-        )
-    return out
-
-
-def build_cuckoo_sidecar_table(
-    seen: DataFrame, config: CrawlConfig, gen: int = 0
-) -> DataFrame:
-    """Scale-path cuckoo sidecar: (domain_bucket, kind, gen, bits) rows
-    as a DataFrame that never touches the driver — persist via TableIO /
-    parquet partitioned on domain_bucket, probe with probe_cuckoo_table,
-    expire with expire_urls_table. Incremental maintenance is
-    unionByName of per-wave delta sidecars built at increasing ``gen``
-    (probe ORs across a bucket's filter rows, gen-gated against its
-    tombstones). Compaction = rebuild from the compacted seen table
-    (the exact state already has expired rows anti-joined out —
-    module docstring / plans/tableio.py), which also drops tombstones."""
-    return _cuckoo_df(seen, config).select(
-        "domain_bucket",
-        F.lit("filter").alias("kind"),
-        F.lit(int(gen)).alias("gen"),
-        "bits",
-    )
+    return hashed.groupBy("domain_bucket").applyInPandas(_build, _CUCKOO_TABLE_SCHEMA)
 
 
 def expire_urls_table(
     sidecar: DataFrame, expired: DataFrame, config: CrawlConfig, gen: int = 1
 ) -> DataFrame:
-    """Table-path re-crawl window: append tombstone rows carrying the
-    expired keys' exact xxhash64 values at generation ``gen`` — expired
-    URLs read unseen again through probe_cuckoo_table until a filter row
+    """Re-crawl window: append tombstone rows carrying the expired
+    keys' exact xxhash64 values at generation ``gen`` — expired URLs
+    read unseen again through probe_cuckoo_table until a filter row
     NEWER than the tombstone re-inserts them. One aggregation shuffle of
     the expired set on domain_bucket; the sidecar is untouched (append-
     only, so the same persisted filter rows keep serving). Nothing flows
     through the driver. Tombstones fold away at compaction: rebuild the
     sidecar from the seen table after its expired anti-join."""
-    tomb_schema = _CUCKOO_TABLE_SCHEMA
-
     hashed = expired.select(
         U.domain_bucket(U.netloc(F.col("url")), config.n_domain_buckets).alias(
             "domain_bucket"
@@ -564,8 +398,30 @@ def expire_urls_table(
             }
         )
 
-    tombs = hashed.groupBy("domain_bucket").applyInPandas(_pack, tomb_schema)
+    tombs = hashed.groupBy("domain_bucket").applyInPandas(_pack, _CUCKOO_TABLE_SCHEMA)
     return sidecar.unionByName(tombs)
+
+
+def _cuckoo_hits(cand: pd.DataFrame, side: pd.DataFrame) -> np.ndarray:
+    """True iff some filter row with gen > the key's latest tombstone
+    gen contains it."""
+    hh = cand["__h"].to_numpy().view(np.uint64)
+    # latest tombstone gen per candidate key (-1 if never expired)
+    tomb_gen = np.full(len(hh), -1, dtype=np.int64)
+    filters: list[tuple[int, CuckooFilter]] = []
+    for r in side.to_dict("records"):
+        if r["kind"] == "tombstone":
+            keys = np.frombuffer(r["bits"], dtype=np.uint64)
+            hit = np.isin(hh, keys)
+            tomb_gen[hit] = np.maximum(tomb_gen[hit], int(r["gen"]))
+        else:
+            filters.append((int(r["gen"]), CuckooFilter.from_bytes(bytes(r["bits"]))))
+    seen_any = np.zeros(len(hh), dtype=bool)
+    for g, f in filters:
+        live = np.where(tomb_gen < g)[0]
+        if len(live):
+            seen_any[live] |= f.contains_many(hh[live])
+    return seen_any
 
 
 def probe_cuckoo_table(
@@ -576,147 +432,13 @@ def probe_cuckoo_table(
     pre_resolved: bool = False,
     bucket_col: str | None = None,
 ) -> DataFrame:
-    """Table-backed cuckoo probe: candidates cogrouped with the sidecar
-    on domain_bucket — each task holds only its buckets' filter bytes,
-    nothing is collected or broadcast (the 10^10-key deletable-
-    membership path). ``might_seen`` is True iff some filter row with
-    gen > the key's latest tombstone gen contains it; False ⇒ definitely
-    not seen (no false negatives — tombstones match exact 64-bit keys).
-    Same pre_resolved / bucket_col fast path as probe_bloom_table: a
-    candidate set already hash-partitioned on its stored domain_bucket
-    cogroups with no exchange. Probe parallelism = #buckets — size
-    ``n_domain_buckets`` to the cluster's core count at deploy (see
-    probe_bloom_table)."""
-    from kryptone_spark.functions.cuckoo import CuckooFilter
-
-    if pre_resolved:
-        prep = candidates.withColumn("__resolved", F.col(url_col))
-    else:
-        prep = candidates.select(
-            "*",
-            U.resolve_relative(F.col(url_col), F.lit(_origin_lit(config))).alias(
-                "__resolved"
-            ),
-            # nondeterministic barrier: stops CollapseProject inlining
-            # the dot-segment fold into the hash projections below
-            F.monotonically_increasing_id().alias("__pb"),
-        )
-    bucket = (
-        F.col(bucket_col)
-        if bucket_col is not None
-        else U.domain_bucket(U.netloc(F.col("__resolved")), config.n_domain_buckets)
+    """Adds ``might_seen`` from the cuckoo sidecar through the same
+    bucket cogroup as probe_bloom_table (same pre_resolved / bucket_col
+    fast path, same parallelism = #buckets). False ⇒ definitely not
+    seen: no false negatives, since tombstones match exact 64-bit
+    keys."""
+    return _probe_table(
+        candidates, sidecar, config, url_col, pre_resolved, bucket_col,
+        {"__h": F.xxhash64(F.col("__resolved"))},
+        _cuckoo_hits,
     )
-    prep = prep.select(
-        "*",
-        bucket.alias("__bk"),
-        F.xxhash64(F.col("__resolved")).alias("__h"),
-    ).drop("__resolved", *([] if pre_resolved else ["__pb"]))
-
-    out_fields = list(prep.schema.fields) + [
-        T.StructField("might_seen", T.BooleanType(), False)
-    ]
-    out_schema = T.StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-
-    def _probe(cand: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        if len(cand) == 0:
-            return pd.DataFrame(columns=out_cols)
-        hh = cand["__h"].to_numpy().view(np.uint64)
-        # latest tombstone gen per candidate key (-1 if never expired)
-        tomb_gen = np.full(len(hh), -1, dtype=np.int64)
-        filters: list[tuple[int, CuckooFilter]] = []
-        for r in side.to_dict("records"):
-            if r["kind"] == "tombstone":
-                keys = np.frombuffer(r["bits"], dtype=np.uint64)
-                hit = np.isin(hh, keys)
-                tomb_gen[hit] = np.maximum(tomb_gen[hit], int(r["gen"]))
-            else:
-                filters.append(
-                    (int(r["gen"]), CuckooFilter.from_bytes(bytes(r["bits"])))
-                )
-        seen_any = np.zeros(len(hh), dtype=bool)
-        for g, f in filters:
-            live = np.where(tomb_gen < g)[0]
-            if len(live):
-                seen_any[live] |= f.contains_many(hh[live])
-        out = cand.copy()
-        out["might_seen"] = seen_any
-        return out[out_cols]
-
-    res = (
-        prep.groupBy("__bk")
-        .cogroup(sidecar.groupBy("domain_bucket"))
-        .applyInPandas(_probe, schema=out_schema)
-    )
-    return res.drop("__bk", "__h")
-
-
-def probe_cuckoo(
-    candidates: DataFrame,
-    sidecar: dict[int, bytes],
-    config: CrawlConfig,
-    url_col: str = "url",
-) -> DataFrame:
-    """Adds ``might_seen`` from the cuckoo sidecar (False ⇒ definitely
-    not seen — cuckoo filters, like blooms, have no false negatives)."""
-    from kryptone_spark.functions.cuckoo import CuckooFilter
-
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(sidecar)
-    _LIVE_BROADCASTS.append(bc)
-
-    @F.pandas_udf(T.BooleanType())
-    def _probe(bucket: pd.Series, h: pd.Series) -> pd.Series:
-        table = bc.value
-        out = np.zeros(len(bucket), dtype=bool)
-        b = bucket.to_numpy()
-        hh = h.to_numpy().view(np.uint64)
-        for bk in np.unique(b):
-            raw = table.get(int(bk))
-            if raw is None:
-                continue
-            f = CuckooFilter.from_bytes(raw)
-            idx = np.where(b == bk)[0]
-            out[idx] = f.contains_many(hh[idx])
-        return pd.Series(out)
-
-    prep = candidates.select(
-        "*",
-        U.resolve_relative(F.col(url_col), F.lit(_origin_lit(config))).alias(
-            "__resolved"
-        ),
-        F.monotonically_increasing_id().alias("__pb"),
-    )
-    return prep.withColumn(
-        "might_seen",
-        _probe(
-            U.domain_bucket(U.netloc(F.col("__resolved")), config.n_domain_buckets),
-            F.xxhash64(F.col("__resolved")),
-        ),
-    ).drop("__resolved", "__pb")
-
-
-def expire_urls(
-    sidecar: dict[int, bytes], expired: DataFrame, config: CrawlConfig
-) -> dict[int, bytes]:
-    """Re-crawl window: delete expired URLs from the cuckoo sidecar so
-    they read as unseen again. Exact-state deletion (the seen table)
-    happens by anti-joining the expired set at compaction; the sidecar
-    delete keeps the fast path consistent without a rebuild."""
-    from kryptone_spark.functions.cuckoo import CuckooFilter
-
-    rows = expired.select(
-        U.domain_bucket(U.netloc(F.col("url")), config.n_domain_buckets).alias("b"),
-        F.xxhash64("url").alias("h"),
-    ).collect()
-    by_bucket: dict[int, list[int]] = {}
-    for r in rows:
-        by_bucket.setdefault(int(r["b"]), []).append(int(r["h"]))
-    out = dict(sidecar)
-    for bk, hs in by_bucket.items():
-        if bk not in out:
-            continue
-        f = CuckooFilter.from_bytes(out[bk])
-        f.delete_many(np.array(hs, dtype=np.int64))
-        out[bk] = f.to_bytes()
-    return out

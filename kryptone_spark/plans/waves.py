@@ -155,7 +155,6 @@ class WaveRunner:
         io: TableIO,
         robots: DataFrame | None = None,
         use_bloom: bool = False,
-        bloom_mode: str = "broadcast",
         checkpoint_interval: int = 1,
         write_edges: bool = True,
         collect_stats: bool = True,
@@ -187,12 +186,6 @@ class WaveRunner:
         self.io = io
         self.robots = robots
         self.use_bloom = use_bloom
-        # "broadcast": sidecar collected + broadcast (small scale);
-        # "table": sidecar stays a DataFrame, probed via bucket cogroup
-        # — the 10^10 path where filter bits never touch the driver
-        if bloom_mode not in ("broadcast", "table"):
-            raise ValueError(f"bloom_mode must be broadcast|table, got {bloom_mode!r}")
-        self.bloom_mode = bloom_mode
         self.checkpoint_interval = max(1, checkpoint_interval)
         self.write_edges = write_edges
         # collect_stats=False skips the per-wave candidate/out-count
@@ -225,9 +218,9 @@ class WaveRunner:
         # incremental bloom sidecar (use_bloom): built once from the
         # current seen state, then extended with each wave's seen DELTA
         # — never rebuilt from the full set; compacted (same-size OR)
-        # when a bucket accumulates too many delta entries. list when
-        # bloom_mode=broadcast, DataFrame when bloom_mode=table.
-        self._bloom_sidecar: list[dict] | DataFrame | None = None
+        # when a bucket accumulates too many delta entries. A DataFrame
+        # probed via bucket cogroup: filter bits never touch the driver.
+        self._bloom_sidecar: DataFrame | None = None
         self._bloom_deltas = 0  # merges since last compaction
         self.bloom_compact_every = 8
         # fetch-failure feed (url, n_failures): in production this dim
@@ -672,17 +665,13 @@ class WaveRunner:
         if self.use_bloom and seen_urls is not None:
             from kryptone_spark.operators.seen import (
                 bloom_prefilter,
-                build_bloom_sidecar,
                 build_bloom_sidecar_table,
             )
 
             if self._bloom_sidecar is None:
-                self._bloom_sidecar = (
-                    build_bloom_sidecar_table(seen_urls, self.config)
-                    .transform(checkpoint_cut)
-                    if self.bloom_mode == "table"
-                    else build_bloom_sidecar(seen_urls, self.config)
-                )
+                self._bloom_sidecar = build_bloom_sidecar_table(
+                    seen_urls, self.config
+                ).transform(checkpoint_cut)
             admitted = bloom_prefilter(
                 links, seen_urls, self.config, visited=visited,
                 allow_home=allow_home, sidecar=self._bloom_sidecar,
@@ -754,44 +743,38 @@ class WaveRunner:
         # wave). P12's set-union semantics are an anti-join here.
         if seen is not None:
             seen_rows = seen_rows.join(seen.select("url"), "url", "left_anti")
-        # materialize the delta ONCE: the sidecar build below collects
-        # (or checkpoints) it eagerly, and _append_state/_queue_flush
-        # then reuse the checkpointed RDD instead of recomputing the
-        # anti-join + per-url agg DAG per consumer. Coalesced first
-        # (narrow): the anti-join leaves shuffle.partitions mostly-empty
-        # partitions on a small wave, and every later wave re-scans this
-        # delta inside the seen union — right-sizing it here is what
+        # materialize the delta ONCE: the sidecar build below,
+        # _append_state and _queue_flush then reuse the checkpointed RDD
+        # instead of recomputing the anti-join + per-url agg DAG per
+        # consumer. Coalesced first (narrow): the anti-join leaves
+        # shuffle.partitions mostly-empty partitions on a small wave,
+        # and every later wave re-scans this delta inside the seen
+        # union — right-sizing it here is what
         # keeps deep crawls' per-wave task count flat (with the periodic
         # fold in _append_state). Big waves keep full width:
         # delta_nparts is capped at defaultParallelism.
         seen_rows = seen_rows.coalesce(delta_nparts).transform(checkpoint_cut)
         if self.use_bloom and self._bloom_sidecar is not None:
             from kryptone_spark.operators.seen import (
-                build_bloom_sidecar,
                 build_bloom_sidecar_table,
                 compact_sidecar_table,
-                compact_sidecars,
-                merge_sidecars,
             )
 
-            # O(delta): only the wave's genuinely-new seen rows hash
-            delta = (
-                build_bloom_sidecar_table(seen_rows, self.config)
-                if self.bloom_mode == "table"
-                else build_bloom_sidecar(seen_rows, self.config)
+            # O(delta): only the wave's genuinely-new seen rows hash.
+            # Cut as it is merged, so later waves' probes read the built
+            # bits instead of re-running every delta's build.
+            delta = build_bloom_sidecar_table(seen_rows, self.config)
+            self._bloom_sidecar = self._bloom_sidecar.unionByName(
+                delta.transform(checkpoint_cut)
             )
-            self._bloom_sidecar = merge_sidecars(self._bloom_sidecar, delta)
             self._bloom_deltas += 1
             # same-(m,k) OR compaction bounds probe cost on long crawls
             # (small deltas all sit at the min_bits floor, so they
             # collapse to one bloom per bucket)
             if self._bloom_deltas >= self.bloom_compact_every:
-                self._bloom_sidecar = (
-                    compact_sidecar_table(self._bloom_sidecar)
-                    .transform(checkpoint_cut)
-                    if self.bloom_mode == "table"
-                    else compact_sidecars(self._bloom_sidecar)
-                )
+                self._bloom_sidecar = compact_sidecar_table(
+                    self._bloom_sidecar
+                ).transform(checkpoint_cut)
                 self._bloom_deltas = 0
         new_frontier = per_url.where(F.col("is_valid") & ~F.col("filtered")).select(
             "url", "domain", "domain_bucket",
@@ -863,14 +846,6 @@ class WaveRunner:
         if (wave + 1) % self.checkpoint_interval == 0:
             self._flush_async()
         self.phase_seconds["flush"] += time.perf_counter() - t4
-
-        # drop executor copies of this wave's probe broadcasts so they
-        # don't pile up O(#waves); a lazy plan that re-executes a probe
-        # simply re-ships the broadcast (unpersist, never destroy)
-        if self.use_bloom:
-            from kryptone_spark.operators.seen import release_bloom_broadcasts
-
-            release_bloom_broadcasts()
 
         dur = float(stats["dur"] or 0.0)
         self._offset += dur

@@ -198,22 +198,24 @@ def run_crawl_ingest(
         state["seen"] = rows
         io.write_wave("seen_stream", rows, 0)
 
-    def _bootstrap() -> None:
+    def _bootstrap(batch_id: int) -> None:
         """Seed on first start; REHYDRATE on restart. A restarted query
-        resumes from the streaming checkpoint's next batch id, so the
-        in-memory seen/visited must reload to the exact committed point
-        — re-seeding from scratch would compute every post-restart
-        verdict against state missing all prior batches (URLs admitted
-        twice, seen rows duplicated). ``seen_stream`` is written LAST
-        per batch, so its highest committed wave is the batch's commit
-        marker; a ``visited_stream`` wave past it is a torn commit and
-        is rolled back here (Structured Streaming re-delivers that
-        batch id, and the per-wave writes are overwrite-idempotent)."""
-        committed = io.committed_waves("seen_stream")
-        if not committed:
+        resumes at ``batch_id``, the first batch id the streaming
+        checkpoint has not committed, so the in-memory seen/visited must
+        reload to the exact state before it — re-seeding from scratch
+        would compute every post-restart verdict against state missing
+        all prior batches (URLs admitted twice, seen rows duplicated).
+        Batch b writes wave b+1 of both tables, so every wave past
+        ``batch_id`` came from a batch that is about to be re-delivered:
+        it is dropped before rehydrating. That one rule covers a torn
+        visited-only wave and a fully written wave whose batch missed
+        the commit log; keeping the latter would let the re-delivered
+        batch's (now empty) deltas overwrite it."""
+        if not io.committed_waves("seen_stream"):
             _seed()
             return
-        io.drop_waves_after("visited_stream", max(committed))
+        for t in ("seen_stream", "visited_stream"):
+            io.drop_waves_after(t, int(batch_id))
         state["seen"] = (
             io.read("seen_stream").drop("wave").localCheckpoint(eager=True)
         )
@@ -228,7 +230,7 @@ def run_crawl_ingest(
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         if state["seen"] is None:
-            _bootstrap()
+            _bootstrap(batch_id)
         ok = batch_df.where(F.col("status") < 400).select("url").distinct()
         visited = state["visited"]
         if visited is not None:  # re-delivery: visited is a set

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from kryptone_spark.config import CrawlConfig
 from kryptone_spark.functions.cuckoo import CuckooFilter
+from kryptone_spark.operators import admission
 from kryptone_spark.operators import seen as seen_ops
 
 
@@ -50,44 +51,51 @@ def config():
 def test_bloom_no_false_negatives(spark, config):
     urls = [f"http://sitea.test/p-{i}" for i in range(500)]
     seen_df = spark.createDataFrame([(u,) for u in urls], "url string")
-    sidecar = seen_ops.build_bloom_sidecar(seen_df, config)
+    sidecar = seen_ops.build_bloom_sidecar_table(seen_df, config)
     cand = spark.createDataFrame(
         [(u,) for u in urls + [f"http://sitea.test/new-{i}" for i in range(500)]],
         "url string",
     )
-    probed = {r["url"]: r["might_seen"] for r in seen_ops.probe_bloom(cand, sidecar, config).collect()}
+    probed = {
+        r["url"]: r["might_seen"]
+        for r in seen_ops.probe_bloom_table(cand, sidecar, config).collect()
+    }
     for u in urls:
         assert probed[u] is True, u
     fp = sum(probed[f"http://sitea.test/new-{i}"] for i in range(500)) / 500
     assert fp < 0.05, fp
 
 
-def test_bloom_table_probe_matches_broadcast(spark, config):
-    """The table-backed bucket-cogroup probe must produce the exact
-    might_seen vector of the broadcast probe — same blooms, same
-    hashes, only the data movement differs."""
+def _assert_exact_membership(probed: dict, seen_urls: set, max_fp: float):
+    """might_seen against exact set membership: every seen key hits
+    (zero false negatives) and the never-seen keys hit at most at
+    ``max_fp``."""
+    fn = [k for k, hit in probed.items() if k[0] in seen_urls and not hit]
+    assert not fn, fn
+    new = [hit for k, hit in probed.items() if k[0] not in seen_urls]
+    assert new and sum(new) / len(new) <= max_fp, sum(new) / len(new)
+
+
+def test_bloom_table_probe_exact_membership(spark, config):
+    """The bucket-cogroup probe keeps every candidate row with its
+    extra columns (duplicate urls included) and answers might_seen
+    with no false negatives and a bounded false-positive rate."""
     urls = [f"http://sitea.test/p-{i}" for i in range(400)]
     seen_df = spark.createDataFrame([(u,) for u in urls], "url string")
+    cand_rows = list(enumerate(
+        urls[:200] + [f"http://sitea.test/new-{i}" for i in range(200)]
+        + urls[:20]
+    ))
     cand = spark.createDataFrame(
-        [(u, i) for i, u in enumerate(
-            urls[:200] + [f"http://sitea.test/new-{i}" for i in range(200)]
-        )],
-        "url string, tag int",
+        [(u, i) for i, u in cand_rows], "url string, tag int"
     )
-    sidecar_list = seen_ops.build_bloom_sidecar(seen_df, config)
     sidecar_df = seen_ops.build_bloom_sidecar_table(seen_df, config)
-    a = {
-        (r["url"], r["tag"]): r["might_seen"]
-        for r in seen_ops.probe_bloom(cand, sidecar_list, config).collect()
-    }
-    b = {
+    probed = {
         (r["url"], r["tag"]): r["might_seen"]
         for r in seen_ops.probe_bloom_table(cand, sidecar_df, config).collect()
     }
-    assert a == b
-    # and still no false negatives through the table path
-    for i, u in enumerate(urls[:200]):
-        assert b[(u, i)] is True, u
+    assert set(probed) == {(u, i) for i, u in cand_rows}
+    _assert_exact_membership(probed, set(urls), max_fp=0.05)
 
 
 def test_bloom_table_fast_path_matches(spark, config):
@@ -154,21 +162,17 @@ def test_compact_sidecars_preserves_membership(spark, config):
     """Same-(m,k) OR compaction: no false negatives can appear (OR only
     adds bits), false positives stay bounded, and the entry count
     collapses to one per (bucket, m, k)."""
-    waves = [
-        spark.createDataFrame(
+    sidecar = None
+    for w in range(4):
+        wdf = spark.createDataFrame(
             [(f"http://sitea.test/w{w}-{i}",) for i in range(100)], "url string"
         )
-        for w in range(4)
-    ]
-    sidecar = []
-    for wdf in waves:
-        sidecar = seen_ops.merge_sidecars(
-            sidecar, seen_ops.build_bloom_sidecar(wdf, config)
-        )
-    compacted = seen_ops.compact_sidecars(sidecar)
-    shapes = {(r["domain_bucket"], r["m"], r["k"]) for r in compacted}
-    assert len(compacted) == len(shapes)  # one entry per shape
-    assert len(compacted) < len(sidecar)
+        delta = seen_ops.build_bloom_sidecar_table(wdf, config)
+        sidecar = delta if sidecar is None else sidecar.unionByName(delta)
+    compacted = seen_ops.compact_sidecar_table(sidecar)
+    shapes = [(r["domain_bucket"], r["m"], r["k"]) for r in compacted.collect()]
+    assert len(shapes) == len(set(shapes))  # one entry per shape
+    assert len(shapes) < sidecar.count()
     cand = spark.createDataFrame(
         [(f"http://sitea.test/w{w}-{i}",) for w in range(4) for i in range(100)]
         + [(f"http://sitea.test/other-{i}",) for i in range(100)],
@@ -176,79 +180,95 @@ def test_compact_sidecars_preserves_membership(spark, config):
     )
     before = {
         r["url"]: r["might_seen"]
-        for r in seen_ops.probe_bloom(cand, sidecar, config).collect()
+        for r in seen_ops.probe_bloom_table(cand, sidecar, config).collect()
     }
     after = {
         r["url"]: r["might_seen"]
-        for r in seen_ops.probe_bloom(cand, compacted, config).collect()
+        for r in seen_ops.probe_bloom_table(cand, compacted, config).collect()
     }
     for u, hit in before.items():
         if hit:  # a seen (or FP) key can never flip to definitely-new
             assert after[u] is True, u
     fp = sum(after[f"http://sitea.test/other-{i}"] for i in range(100)) / 100
     assert fp < 0.10, fp
-    # table-path compaction agrees
-    sidecar_df = spark.createDataFrame(sidecar, schema=seen_ops._SIDECAR_SCHEMA)
-    tbl = {
-        (r["domain_bucket"], r["m"], r["k"]): bytes(r["bits"])
-        for r in seen_ops.compact_sidecar_table(sidecar_df).collect()
-    }
-    lst = {
-        (r["domain_bucket"], r["m"], r["k"]): bytes(r["bits"]) for r in compacted
-    }
-    assert tbl == lst
+
+
+def test_bloom_prefilter_probes_once(spark, config, tmp_path, monkeypatch):
+    """bloom_prefilter splits the probe into maybe-seen and fresh
+    branches; both must read one probe result, so the Python cogroup
+    runs once per call, not once per branch."""
+    log = tmp_path / "probe_calls"
+    real = seen_ops._bloom_hits
+
+    def counting(*args):
+        with open(log, "a") as f:
+            f.write("x\n")
+        return real(*args)
+
+    # the probe's pandas function is pickled by value when the plan is
+    # built, carrying this wrapper to the Python workers
+    monkeypatch.setattr(seen_ops, "_bloom_hits", counting)
+    seen_df = spark.createDataFrame(
+        [(f"http://sitea.test/p-{i}",) for i in range(50)], "url string"
+    )
+    links = spark.createDataFrame(
+        [("http://sitea.test/", f"http://sitea.test/p-{i}") for i in range(40, 60)],
+        "src_url string, url string",
+    )
+    sidecar = seen_ops.build_bloom_sidecar_table(seen_df, config).localCheckpoint()
+    out = seen_ops.bloom_prefilter(links, seen_df, config, sidecar=sidecar)
+    plain = admission.admit(links, config, seen=seen_df)
+    assert sorted(map(tuple, out.select(plain.columns).collect())) == sorted(
+        map(tuple, plain.collect())
+    )
+    # every candidate sits in one domain_bucket: one group, one call
+    assert log.read_text().count("x") == 1
 
 
 def test_cuckoo_sidecar_probe_and_expire(spark, config):
     urls = [f"http://sitea.test/p-{i}" for i in range(300)]
     seen_df = spark.createDataFrame([(u,) for u in urls], "url string")
-    sidecar = seen_ops.build_cuckoo_sidecar(seen_df, config)
+    sidecar = seen_ops.build_cuckoo_sidecar_table(seen_df, config)
     cand = spark.createDataFrame(
         [(u,) for u in urls[:50] + [f"http://sitea.test/x-{i}" for i in range(50)]],
         "url string",
     )
     probed = {
         r["url"]: r["might_seen"]
-        for r in seen_ops.probe_cuckoo(cand, sidecar, config).collect()
+        for r in seen_ops.probe_cuckoo_table(cand, sidecar, config).collect()
     }
     for u in urls[:50]:
         assert probed[u] is True
     # re-crawl window: expire the first 50 → they read unseen again
     expired = spark.createDataFrame([(u,) for u in urls[:50]], "url string")
-    sidecar2 = seen_ops.expire_urls(sidecar, expired, config)
+    sidecar2 = seen_ops.expire_urls_table(sidecar, expired, config)
     probed2 = {
         r["url"]: r["might_seen"]
-        for r in seen_ops.probe_cuckoo(cand, sidecar2, config).collect()
+        for r in seen_ops.probe_cuckoo_table(cand, sidecar2, config).collect()
     }
-    refetchable = sum(not probed2[u] for u in urls[:50])
-    assert refetchable >= 48  # tiny residual FP allowed
+    assert not any(probed2[u] for u in urls[:50])
 
 
-def test_cuckoo_table_probe_matches_broadcast(spark, config):
-    """The table-backed cuckoo probe must produce the exact might_seen
-    vector of the broadcast probe — same filters, same hashes, only the
-    data movement differs (twin of the bloom path-equality test)."""
+def test_cuckoo_table_probe_exact_membership(spark, config):
+    """Twin of test_bloom_table_probe_exact_membership for the cuckoo
+    probe: every candidate row kept with its columns, no false
+    negatives, bounded false positives."""
     urls = [f"http://sitea.test/p-{i}" for i in range(400)]
     seen_df = spark.createDataFrame([(u,) for u in urls], "url string")
+    cand_rows = list(enumerate(
+        urls[:200] + [f"http://sitea.test/new-{i}" for i in range(200)]
+        + urls[:20]
+    ))
     cand = spark.createDataFrame(
-        [(u, i) for i, u in enumerate(
-            urls[:200] + [f"http://sitea.test/new-{i}" for i in range(200)]
-        )],
-        "url string, tag int",
+        [(u, i) for i, u in cand_rows], "url string, tag int"
     )
-    sidecar_dict = seen_ops.build_cuckoo_sidecar(seen_df, config)
     sidecar_df = seen_ops.build_cuckoo_sidecar_table(seen_df, config)
-    a = {
-        (r["url"], r["tag"]): r["might_seen"]
-        for r in seen_ops.probe_cuckoo(cand, sidecar_dict, config).collect()
-    }
-    b = {
+    probed = {
         (r["url"], r["tag"]): r["might_seen"]
         for r in seen_ops.probe_cuckoo_table(cand, sidecar_df, config).collect()
     }
-    assert a == b
-    for i, u in enumerate(urls[:200]):  # no false negatives, table path
-        assert b[(u, i)] is True, u
+    assert set(probed) == {(u, i) for i, u in cand_rows}
+    _assert_exact_membership(probed, set(urls), max_fp=0.02)
 
 
 def test_cuckoo_table_expire_and_reinsert(spark, config):
@@ -289,19 +309,6 @@ def test_cuckoo_table_expire_and_reinsert(spark, config):
         assert probed3[u] is True, u
 
 
-def test_cuckoo_broadcast_ceiling_enforced(spark, config, monkeypatch):
-    """Past the byte ceiling the broadcast builder must raise (a
-    controlled error beats a driver OOM at 10^10 keys); the table
-    builder keeps working at any size."""
-    seen_df = spark.createDataFrame(
-        [(f"http://sitea.test/p-{i}",) for i in range(200)], "url string"
-    )
-    monkeypatch.setattr(seen_ops, "BLOOM_BROADCAST_MAX_BYTES", 8)
-    with pytest.raises(ValueError, match="broadcast ceiling"):
-        seen_ops.build_cuckoo_sidecar(seen_df, config)
-    assert seen_ops.build_cuckoo_sidecar_table(seen_df, config).count() > 0
-
-
 def test_cuckoo_table_probe_collects_nothing(spark, config):
     """Scale contract: the table path's plan must not broadcast the
     filter bytes (they flow through the cogroup shuffle, per bucket)."""
@@ -335,21 +342,6 @@ def test_cuckoo_overfill_never_loses_inserted_keys():
     assert 0 < len(accepted) < len(keys)  # some failed — the scenario under test
     got = f.contains_many(np.array(accepted, dtype=np.uint64))
     assert got.all(), f"{(~got).sum()} accepted keys read as absent"
-
-
-def test_merge_sidecars_rejects_mixed_paths(spark):
-    """broadcast-list + table-DataFrame sidecars cannot merge — a clear
-    TypeError beats the AttributeError it used to raise."""
-    import pytest as _pytest
-
-    from kryptone_spark.operators.seen import merge_sidecars
-
-    df = spark.createDataFrame([(1,)], "x int")
-    with _pytest.raises(TypeError, match="SAME path"):
-        merge_sidecars([{"domain_bucket": 0}], df)
-    with _pytest.raises(TypeError, match="SAME path"):
-        merge_sidecars(df, [{"domain_bucket": 0}])
-    assert merge_sidecars([1], [2]) == [1, 2]
 
 
 def test_synth_frontier_start_offset_identity(spark):

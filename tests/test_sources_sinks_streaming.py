@@ -722,6 +722,73 @@ def test_streaming_crawl_ingest_restart_recovery(spark, tmp_path):
     assert io_s.read("seen_stream").count() == len(got)
 
 
+def test_streaming_crawl_ingest_redelivery_after_uncommitted_batch(spark, tmp_path):
+    """Crash window: both stream tables committed the last batch's wave
+    but the query died before Structured Streaming wrote that batch's
+    commit log entry. The restart re-delivers the batch; its deltas
+    come out empty against state that already holds them, and they
+    must not overwrite the committed wave."""
+    import os
+    import time as _time
+
+    from kryptone_spark.config import CrawlConfig
+    from kryptone_spark.plans.tableio import TableIO
+    from kryptone_spark.plans.waves import WaveRunner
+    from kryptone_spark.streaming import ingest
+    from kryptone_spark.synth import site_df, synth_site
+    from tests import oracle
+
+    site = synth_site(n_domains=2, n_products=10, page_size=4, seed=29)
+    config = CrawlConfig(start_urls=["http://sitea.test/"], ignore_images=True)
+    io_b = TableIO(spark, str(tmp_path / "batch"))
+    WaveRunner(spark, config, site_df(spark, site), io_b).run()
+    by_wave = {}
+    for r in io_b.read("fetch_batches").select("wave", "url", "fetch_at").collect():
+        by_wave.setdefault(r["wave"], []).append(r)
+
+    results = tmp_path / "results"
+    results.mkdir()
+    t0 = _time.time()
+    for w in sorted(by_wave):
+        p = results / f"w{w:03d}.json"
+        p.write_text("\n".join(
+            json.dumps({
+                "url": r["url"],
+                "fetch_ts": r["fetch_at"].strftime("%Y-%m-%dT%H:%M:%S.000Z"),
+                "status": 200,
+                "n_links": None,
+            })
+            for r in by_wave[w]
+        ))
+        os.utime(p, (t0 + w, t0 + w))
+
+    io_s = TableIO(spark, str(tmp_path / "streamed"))
+    ckpt = tmp_path / "ckpt_redeliver"
+
+    def drain():
+        stream = ingest.fetch_results_stream(
+            spark, str(results), max_files_per_trigger=1
+        )
+        ingest.run_crawl_ingest(
+            stream, site_df(spark, site), config, io_s, str(ckpt)
+        ).awaitTermination(300)
+
+    drain()
+    last = max(int(p.name) for p in (ckpt / "commits").iterdir() if p.name.isdigit())
+    (ckpt / "commits" / str(last)).unlink()
+    (ckpt / "commits" / f".{last}.crc").unlink(missing_ok=True)
+    drain()
+
+    state = oracle.crawl(site, config)
+    visited = [r["url"] for r in io_s.read("visited_stream").collect()]
+    assert sorted(visited) == sorted(state.visited)
+    got = {}
+    for r in sorted(io_s.read("seen_stream").collect(), key=lambda r: r["first_wave"]):
+        got.setdefault(r["url"], r["verdict"])
+    assert set(got) == state.seen
+    assert io_s.read("seen_stream").count() == len(got)
+
+
 def test_streaming_crawl_ingest_folds_state_across_many_batches(spark, tmp_path):
     """A per-domain budget of 1 stretches the crawl across enough waves
     that the stream crosses the 16-batch state-fold boundary (the same

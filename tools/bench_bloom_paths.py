@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Anti-join-leg comparison across seen-membership strategies.
 
-VERDICT r1 #3 done-criterion evidence: the table-backed bloom sidecar
-(bucket-cogroup probe, nothing through the driver) must leave the
-per-wave candidate-vs-seen leg unchanged or better vs (a) the plain
-exact anti-join and (b) the broadcast bloom path, at bench scale.
+The table-backed bloom sidecar (bucket-cogroup probe, nothing through
+the driver) against the plain exact anti-join on the per-wave
+candidate-vs-seen leg, at bench scale, with candidates either
+self-bucketing or stored pre-bucketed.
 
 Protocol mirrors bench.py's steady-state discipline: localCheckpointed
 inputs, one cold run (codegen/JIT, reported separately), best-of-3
@@ -73,21 +73,6 @@ def main():
 
     n, cold, best = steady(lambda: cand.join(seen_df, "url", "left_anti").count())
     out["exact_antijoin"] = {"rows": n, "cold_sec": cold, "sec": best}
-
-    t = time.time()
-    sidecar_list = seen_ops.build_bloom_sidecar(seen_df, config)
-    out["bloom_build_broadcast_sec"] = round(time.time() - t, 3)
-
-    def run_broadcast():
-        probed = seen_ops.probe_bloom(cand, sidecar_list, config)
-        maybe = probed.where(F.col("might_seen")).drop("might_seen")
-        fresh = probed.where(~F.col("might_seen")).drop("might_seen")
-        return (
-            maybe.join(seen_df, "url", "left_anti").unionByName(fresh).count()
-        )
-
-    n, cold, best = steady(run_broadcast)
-    out["bloom_broadcast"] = {"rows": n, "cold_sec": cold, "sec": best}
 
     t = time.time()
     sidecar_df = seen_ops.build_bloom_sidecar_table(

@@ -18,7 +18,7 @@ pages/s over the whole crawl, phase_seconds, and peak JVM RSS.
 Run solo (CLAUDE.md: concurrent jobs contaminate readings):
 
     WIDTH=250000 DEPTH=16 BLOOM=off   python tools/probe_sustained_crawl.py
-    WIDTH=250000 DEPTH=16 BLOOM=table python tools/probe_sustained_crawl.py
+    WIDTH=250000 DEPTH=16 BLOOM=on    python tools/probe_sustained_crawl.py
 """
 
 from __future__ import annotations
@@ -34,7 +34,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 WIDTH = int(os.environ.get("WIDTH", "250000"))
 DEPTH = int(os.environ.get("DEPTH", "16"))
-BLOOM = os.environ.get("BLOOM", "off")  # off | broadcast | table
+BLOOM = os.environ.get("BLOOM", "off")  # off | on
+if BLOOM not in ("off", "on"):
+    sys.exit(f"BLOOM must be off or on, got {BLOOM!r}")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 from tools.capacity_wave import jvm_peak_rss_gib  # noqa: E402
@@ -81,7 +83,7 @@ def main() -> None:
         WaveRunner(
             spark, config, warm_docs, TableIO(spark, warm_dir),
             collect_stats=False, global_rank=False,
-            use_bloom=BLOOM != "off", bloom_mode=BLOOM if BLOOM != "off" else "broadcast",
+            use_bloom=BLOOM == "on",
             cluster_documents=cluster,
         ).run()
     finally:
@@ -94,8 +96,7 @@ def main() -> None:
         runner = WaveRunner(
             spark, config, docs, io,
             collect_stats=False, global_rank=False,
-            use_bloom=BLOOM != "off",
-            bloom_mode=BLOOM if BLOOM != "off" else "broadcast",
+            use_bloom=BLOOM == "on",
             cluster_documents=cluster,
         )
         t0 = time.time()

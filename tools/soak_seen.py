@@ -1,22 +1,15 @@
 #!/usr/bin/env python
-"""10^8-class seen-table soak — forces the TABLE-BACKED membership
-paths (VERDICT r3, next-round item 1).
-
-The bench suite exercises bloom/cuckoo at 1-16M URLs, where the filter
-bits fit the 512 MiB broadcast ceiling; the 10^10 north-metric story
-rests on the table-backed bucket-cogroup probes (operators/seen.py:
-probe_bloom_table / probe_cuckoo_table) that had only ever run in unit
-tests. This soak:
+"""10^8-class seen-table soak of the bucket-cogroup membership probes
+(operators/seen.py: probe_bloom_table / probe_cuckoo_table) at a scale
+unit tests never reach. This soak:
 
 1. materializes an N_SEEN-URL seen table on DISK (parquet, partitioned
-   on domain_bucket — the engine's storage layout);
-2. proves the broadcast path REFUSES at this scale: at the default
-   N_SEEN = 4x10^8 and 12 bits/key the sidecar is ~570 MiB of filter
-   bits, past BLOOM_BROADCAST_MAX_BYTES — build_bloom_sidecar must
-   raise (caught and recorded), nothing OOMs;
-3. builds the TABLE sidecar (bits never touch the driver), persists it
+   on domain_bucket — the engine's storage layout); at the default
+   N_SEEN = 4x10^8 and 12 bits/key the bloom sidecar is ~570 MiB of
+   filter bits;
+2. builds the sidecar (bits never touch the driver), persists it
    partitioned on domain_bucket;
-4. measures the membership path piecewise over an N_CAND-link
+3. measures the membership path piecewise over an N_CAND-link
    candidate batch (half genuinely seen): (a) the table-sidecar probe
    alone (comparable to the cuckoo leg), (b) the EXACT anti-join
    authority against the plain partitioned-parquet seen table — the
@@ -29,14 +22,13 @@ tests. This soak:
    off-domain candidates 'domain' before 'seen' (single-site config,
    multi-domain synth), so the wave's own label can't see the
    membership rejections;
-5. asserts probe parity on a sampled bucket: the table cogroup's
-   might_seen must equal the broadcast probe run on that bucket alone,
-   and must have ZERO false negatives vs exact membership;
-6. optionally repeats the probe leg with the cuckoo TABLE sidecar at
+4. checks a sampled bucket against exact membership: ZERO false
+   negatives, and records the false-positive rate;
+5. optionally repeats the probe leg with the cuckoo TABLE sidecar at
    N_CUCKOO keys (its per-bucket build walks keys in Python — the
    filter's eviction chain is inherently sequential — so the cuckoo
    leg defaults to 10^8);
-7. records JVM peak RSS (/proc VmHWM) — the whole run must fit the
+6. records JVM peak RSS (/proc VmHWM) — the whole run must fit the
    128 GiB host.
 
 Writes one JSON line to stdout and appends a section to SCALING.md.
@@ -60,8 +52,7 @@ N_CUCKOO = int(os.environ.get("SOAK_CUCKOO_N", str(100_000_000)))
 WORK = os.environ.get("SOAK_DIR", "/root/soak_seen")
 SAMPLE_BUCKET = 7
 # re-measure single legs against cached tables without re-paying the
-# ~7-min broadcast-refusal build / parity collects already evidenced
-SKIP_REFUSAL = os.environ.get("SOAK_SKIP_REFUSAL", "") == "1"
+# parity collects already evidenced
 SKIP_PARITY = os.environ.get("SOAK_SKIP_PARITY", "") == "1"
 
 
@@ -107,12 +98,9 @@ def main() -> None:
     from kryptone_spark.config import CrawlConfig
     from kryptone_spark.operators import seen as S
     from kryptone_spark.operators.seen import (
-        BLOOM_BROADCAST_MAX_BYTES,
         bloom_prefilter,
-        build_bloom_sidecar,
         build_bloom_sidecar_table,
         build_cuckoo_sidecar_table,
-        probe_bloom,
         probe_bloom_table,
         probe_cuckoo_table,
     )
@@ -138,27 +126,9 @@ def main() -> None:
     seen = spark.read.parquet(seen_path)
     seen_urls = seen.select("url")
 
-    # -- 2. broadcast path must REFUSE at this scale -------------------
-    # (the collect of ~570 MiB of bits is itself the cost the ceiling
-    # exists to bound; the enforced ValueError is the contract)
-    expected_bits = N_SEEN * 12 // 8
-    out["expected_sidecar_mib"] = expected_bits >> 20
-    out["broadcast_ceiling_mib"] = BLOOM_BROADCAST_MAX_BYTES >> 20
-    if SKIP_REFUSAL:
-        out["broadcast_refused"] = "skipped (SOAK_SKIP_REFUSAL=1 — evidenced in a prior run)"
-    elif expected_bits > BLOOM_BROADCAST_MAX_BYTES:
-        t = time.time()
-        try:
-            build_bloom_sidecar(seen_urls, config)
-            out["broadcast_refused"] = False  # MUST NOT happen
-        except ValueError as e:
-            out["broadcast_refused"] = True
-            out["broadcast_refusal"] = str(e)[:120]
-        out["broadcast_refusal_sec"] = round(time.time() - t, 1)
-    else:
-        out["broadcast_refused"] = "not-applicable (under ceiling)"
+    out["expected_sidecar_mib"] = (N_SEEN * 12 // 8) >> 20
 
-    # -- 3. TABLE sidecar: bits never touch the driver -----------------
+    # -- 2. sidecar: bits never touch the driver ------------------------
     bloom_path = f"{WORK}/bloom_{N_SEEN}"
     t = time.time()
     if not os.path.exists(f"{bloom_path}/_SUCCESS"):
@@ -170,7 +140,7 @@ def main() -> None:
         "domain_bucket", "m", "k", "bits"
     )
 
-    # -- 4. one full wave: schedule -> probe -> admission+anti-join ----
+    # -- 3. one full wave: schedule -> probe -> admission+anti-join ----
     # candidates straddle the seen boundary: ids < N_SEEN are EXACT
     # members of the seen table (same deterministic URL formula),
     # ids >= N_SEEN are genuinely new
@@ -192,7 +162,7 @@ def main() -> None:
     out["schedule_sec"] = round(time.time() - t, 1)
     out["scheduled"] = n_sched
 
-    # 4a. table-sidecar probe ALONE (apples-to-apples with the cuckoo
+    # 3a. table-sidecar probe ALONE (apples-to-apples with the cuckoo
     # leg below — the full-wave number further down also carries the
     # exact join + admission)
     t = time.time()
@@ -206,7 +176,7 @@ def main() -> None:
     out["bloom_probe_urls_per_sec"] = round(N_CAND / wall)
     out["bloom_might_seen"] = int(might or 0)
 
-    # 4b. EXACT anti-join authority, plain layout: the seen side is
+    # 3b. EXACT anti-join authority, plain layout: the seen side is
     # hash-exchanged in full — the per-wave cost that scales O(|seen|)
     from kryptone_spark.plans.bucketed import (
         is_bucketed_scan,
@@ -224,7 +194,7 @@ def main() -> None:
     out["rejected_as_seen"] = N_CAND - surv_plain
     assert out["rejected_as_seen"] > 0, "candidate batch straddles seen"
 
-    # 4c. the same join against the BUCKETED seen table: clustering on
+    # 3c. the same join against the BUCKETED seen table: clustering on
     # url at write time removes the state-side Exchange, so the wave
     # moves O(|wave|) rows (plans/bucketed.py; one-time build cost
     # amortized over every wave)
@@ -266,12 +236,12 @@ def main() -> None:
             f"{out['bucketed_exchanges']} vs {out['plain_exchanges']}"
         )
 
-    # 4d. full admission wave end-to-end (probe -> split -> admission
+    # 3d. full admission wave end-to-end (probe -> split -> admission
     # incl. the exact join on the maybe slice). NOTE: the synth
     # candidates are off-domain for this single-site config, so
     # admission labels them 'domain' (which precedes 'seen' in the
     # reference's predicate order) — membership rejection counts come
-    # from 4b/4c above, this leg measures wall only.
+    # from 3b/3c above, this leg measures wall only.
     t = time.time()
     admitted = bloom_prefilter(links, seen_urls, config, sidecar=sidecar)
     n_admitted = admitted.count()
@@ -280,7 +250,7 @@ def main() -> None:
     out["bloom_urls_per_sec"] = round(N_CAND / wall)
     out["candidates_out"] = n_admitted
 
-    # 4e. the same wave with the BUCKETED seen table as the exact-join
+    # 3e. the same wave with the BUCKETED seen table as the exact-join
     # authority: bloom_prefilter takes any seen DataFrame, so the
     # layout win composes end-to-end — the maybe-slice join inside
     # admission stops exchanging the state side too
@@ -295,7 +265,7 @@ def main() -> None:
             f"bucketed wave diverged: {n_admitted_b} vs {n_admitted}"
         )
 
-    # -- 5. parity on a sampled bucket ---------------------------------
+    # -- 4. exact membership on a sampled bucket -----------------------
     if SKIP_PARITY:
         out["parity_bucket"] = "skipped (SOAK_SKIP_PARITY=1 — evidenced in a prior run)"
     else:
@@ -303,24 +273,14 @@ def main() -> None:
             S.U.domain_bucket(S.U.netloc(F.col("url")), 64) == SAMPLE_BUCKET
         ).localCheckpoint()
         seen_b = seen.where(F.col("domain_bucket") == SAMPLE_BUCKET).select("url")
-        bc_sidecar = build_bloom_sidecar(seen_b, config)  # 1/64: under ceiling
         table_hits = {
             r["url"]
             for r in probe_bloom_table(cand_b, sidecar, config)
             .where("might_seen").select("url").collect()
         }
-        bcast_hits = {
-            r["url"]
-            for r in probe_bloom(cand_b, bc_sidecar, config)
-            .where("might_seen").select("url").collect()
-        }
         truly_seen = {
             r["url"] for r in cand_b.join(seen_b, "url", "left_semi").collect()
         }
-        assert table_hits == bcast_hits, (
-            f"table/broadcast probe divergence on bucket {SAMPLE_BUCKET}: "
-            f"{len(table_hits ^ bcast_hits)} urls differ"
-        )
         assert truly_seen <= table_hits, (
             f"bloom FALSE NEGATIVES: {len(truly_seen - table_hits)}"
         )
@@ -331,10 +291,10 @@ def main() -> None:
             "false_pos_rate": round(
                 (len(table_hits) - len(truly_seen)) / max(1, n_b - len(truly_seen)), 6
             ),
-            "table_equals_broadcast": True, "false_negatives": 0,
+            "false_negatives": 0,
         }
 
-    # -- 6. cuckoo table leg -------------------------------------------
+    # -- 5. cuckoo table leg -------------------------------------------
     if N_CUCKOO > 0:
         seen_c = (
             seen_urls if N_CUCKOO >= N_SEEN
