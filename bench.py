@@ -39,24 +39,40 @@ def get_spark(cpus: int) -> SparkSession:
     )
 
 
-def bench_frontier_schedule(spark, n_urls: int) -> dict:
+def bench_frontier_schedule(spark, n_urls: int, robots: bool = False) -> dict:
     """North metric: frontier-pop → fetch-batch. 1000-domain synthetic
     frontier with 80% hot-domain skew; politeness budget 1000/domain.
+    ``robots=True`` runs the same pass with a robots dim on the hot
+    domain and 5% of the others, so the verdict's cost shows as the
+    difference between the two legs.
 
     Steady-state protocol (_steady_state): one full-scale cold run —
     reported separately as ``cold_sec``, since it bills whole-stage-
     codegen (Janino) compilation and first-pass JIT, one-time costs
-    fully amortized on any long-running cluster — then best-of-3 timed
-    runs as the steady-state number."""
+    fully amortized on any long-running cluster — then the best of 12
+    timed runs as the steady-state number."""
     from kryptone_spark.operators import schedule
     from kryptone_spark.config import CrawlConfig
+    from kryptone_spark.session import literal_frame
     from kryptone_spark.synth import synth_frontier_df
 
+    n_domains = 1000
     config = CrawlConfig(max_per_domain_per_wave=1000, wait_time=0.01)
-    frontier = synth_frontier_df(spark, n_urls, n_domains=1000, hot_domain_share=0.8)
+    frontier = synth_frontier_df(spark, n_urls, n_domains=n_domains, hot_domain_share=0.8)
     frontier = frontier.localCheckpoint()  # isolate generation cost
+    dim = None
+    if robots:
+        # '/product-3' blocks ~11% of the hot domain; every 20th other
+        # domain disallows one single-digit product prefix
+        rows = [("site0.test", ["/product-3"], 1.0)] + [
+            (f"site{d}.test", [f"/product-{d % 9 + 1}"], 1.0)
+            for d in range(20, n_domains, 20)
+        ]
+        dim = literal_frame(
+            spark, rows, "domain string, disallow array<string>, crawl_delay double"
+        )
     run = lambda df: schedule.politeness_schedule(
-        df, config, wave=0, global_rank=False
+        df, config, wave=0, robots=dim, global_rank=False
     )[0].count()
     n, cold, dt = _steady_state(run, frontier)
     return {"sec": dt, "cold_sec": cold, "rows": n, "urls_per_sec": n_urls / dt}
@@ -297,6 +313,9 @@ def main() -> None:
 
     results: dict[str, dict] = {}
     results["frontier_schedule"] = bench_frontier_schedule(spark, n_frontier)
+    results["frontier_schedule_robots"] = bench_frontier_schedule(
+        spark, n_frontier, robots=True
+    )
     results["admission"] = bench_admission(spark, n_frontier)
     results["seen_antijoin"] = bench_seen_antijoin(spark, n_frontier)
     results["crawl_loop"] = bench_crawl_loop(
@@ -321,6 +340,9 @@ def main() -> None:
         "queries": {k: round(v["sec"], 3) for k, v in results.items()},
         "rows": {k: v["rows"] for k, v in results.items()},
         "frontier_urls_per_sec": round(results["frontier_schedule"]["urls_per_sec"]),
+        "frontier_robots_urls_per_sec": round(
+            results["frontier_schedule_robots"]["urls_per_sec"]
+        ),
         "admission_urls_per_sec": round(results["admission"]["urls_per_sec"]),
         "crawl_pages_per_sec": round(results["crawl_loop"]["pages_per_sec"], 1),
         "crawl_big_pages_per_sec": round(

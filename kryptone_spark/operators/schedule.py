@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kryptone_spark.config import CrawlConfig
@@ -29,7 +29,28 @@ EPOCH = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
 def with_robots(pending: DataFrame, robots: DataFrame | None, config: CrawlConfig) -> DataFrame:
     """Adds ``robots_blocked`` + effective ``crawl_delay`` columns.
     Robots is a per-domain dim — small by construction — so this is a
-    broadcast hash join: no shuffle of the (huge) pending side."""
+    broadcast hash join: no shuffle of the (huge) pending side.
+
+    A URL is blocked when its path (``functions.urls.path``: the
+    RFC-3986 split with the ';params' suffix removed) starts with a
+    non-empty rule. That parse is two regex splits plus a
+    regexp_replace, evaluated inside a higher-order function — which
+    is ``CodegenFallback``, so it runs interpreted — once per rule. It
+    runs only behind a substring prefilter, which is exact:
+
+    - ``path(url)`` is a substring of ``translate(url, '\\t\\r\\n', '')``
+      (group 3 of the split, possibly shortened by the ';params'
+      suffix), so ``startswith(path, d)`` with ``d != ''`` implies that
+      the cleaned URL contains ``d``;
+    - a URL without tab/CR/LF IS its cleaned form, so for it the
+      prefilter is ``contains(url, d)``; a URL with one of them always
+      takes the exact test;
+    - where the prefilter is not true (no rule occurs, or a NULL url,
+      rule array or rule element), the exact test cannot be true
+      either, and ``coalesce(…, false)`` maps both to false.
+
+    So the verdict equals the exact test on every row, and the parse
+    runs only on rows whose URL contains one of its domain's rules."""
     if robots is None:
         return pending.withColumn("robots_blocked", F.lit(False)).withColumn(
             "crawl_delay", F.lit(float(config.wait_time))
@@ -40,13 +61,17 @@ def with_robots(pending: DataFrame, robots: DataFrame | None, config: CrawlConfi
         F.col("crawl_delay").alias("__rdelay"),
     )
     out = pending.join(F.broadcast(r), "domain", "left")
+    url = F.col("url")
+    rules = F.coalesce(F.col("__disallow"), F.array().cast("array<string>"))
     # robots.txt 'Disallow:' with an EMPTY value means allow-all; and
     # startswith('') is true for every path, so empty rules must be
     # dropped or they'd block the domain's entire URL space
-    blocked = F.exists(
-        F.coalesce(F.col("__disallow"), F.array().cast("array<string>")),
-        lambda d: (d != "") & U.path(F.col("url")).startswith(d),
+    exact = F.exists(rules, lambda d: (d != "") & U.path(url).startswith(d))
+    maybe = (
+        url.contains("\t") | url.contains("\r") | url.contains("\n")
+        | F.exists(rules, lambda d: (d != "") & url.contains(d))
     )
+    blocked = F.when(maybe, exact).otherwise(F.lit(False))
     return (
         out.withColumn("robots_blocked", F.coalesce(blocked, F.lit(False)))
         .withColumn(
@@ -264,15 +289,6 @@ def schedule_audit(
         viol.alias("n_violations"),
         (viol == 0).alias("politeness_ok"),
     )
-
-
-def wave_duration(batch: DataFrame) -> float:
-    """Virtual seconds the wave occupies: max over domains of
-    budget-spaced fetch ends — feeds the next wave's start offset."""
-    row = batch.agg(
-        F.max(F.col("rank_in_domain") * F.col("crawl_delay")).alias("d")
-    ).collect()[0]
-    return float(row["d"] or 0.0)
 
 
 def parse_cache_control(
@@ -531,17 +547,24 @@ def with_robots_rep(
         F.col("rules").alias("__rules"),
         F.col("crawl_delay").alias("__rdelay"),
     )
-    out = pending.join(F.broadcast(r), "domain", "left")
+    # the REP target is parsed ONCE per row, below the join: there it
+    # is an attribute of the join's output, which Catalyst cannot
+    # inline back into rep_match's per-rule × per-'*'-part lambdas (a
+    # projection directly under the verdict would be collapsed into
+    # them and re-parsed per evaluation)
+    out = pending.withColumn("__target", rep_target(F.col("url"))).join(
+        F.broadcast(r), "domain", "left"
+    )
     empty = F.array().cast("array<struct<allow:boolean,pattern:string>>")
     blocked = rep_blocked(
-        rep_target(F.col("url")), F.coalesce(F.col("__rules"), empty)
+        F.col("__target"), F.coalesce(F.col("__rules"), empty)
     )
     return (
         out.withColumn("robots_blocked", F.coalesce(blocked, F.lit(False)))
         .withColumn(
             "crawl_delay", F.coalesce(F.col("__rdelay"), F.lit(float(config.wait_time)))
         )
-        .drop("__rules", "__rdelay")
+        .drop("__target", "__rules", "__rdelay")
     )
 
 

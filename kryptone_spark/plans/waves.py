@@ -40,7 +40,7 @@ import time
 from collections import defaultdict
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kryptone_spark.config import CrawlConfig
@@ -712,21 +712,22 @@ class WaveRunner:
         # other predicates are per-URL deterministic). Eager checkpoint:
         # the seen and frontier deltas both derive from it and are
         # written by concurrent flush threads — lazy would run this
-        # shuffle twice.
+        # shuffle twice. Its row count is observed in the same job.
+        n_per_url = Observation()
         per_url = admitted.groupBy("url", "domain", "domain_bucket").agg(
             F.max(F.col("verdict") == "valid").alias("is_valid"),
             F.max(F.col("filtered")).alias("filtered"),
-        ).transform(checkpoint_cut, eager=True)
+        ).observe(n_per_url, F.count(F.lit(1)).alias("n")).transform(
+            checkpoint_cut, eager=True
+        )
         # Width for THIS wave's state deltas (seen_rows/new_frontier
         # below): they are link-count-sized, and `nparts` is sized from
         # the PAGE count — a 10-hub wave emitting 10^5 links would
         # coalesce its deltas (and the next wave's frontier scan) onto
-        # one task. per_url is already eagerly materialized, so count()
-        # is a cheap cached-partition scan, and its cardinality upper-
-        # bounds both deltas.
+        # one task. per_url's cardinality upper-bounds both deltas.
         delta_nparts = max(1, min(
             self.spark.sparkContext.defaultParallelism,
-            (per_url.count() + 2047) // 2048,
+            (n_per_url.get["n"] + 2047) // 2048,
         ))
         t3 = time.perf_counter()
         self.phase_seconds["per_url"] += t3 - t2

@@ -122,6 +122,64 @@ def test_bloom_sidecar_deltas_built_once(spark, site, tmp_path):
     assert "FlatMapGroupsInPandas" not in plan, plan
 
 
+def test_per_url_phase_runs_only_its_checkpoint_jobs(spark, site, tmp_path, monkeypatch):
+    """The state-delta width comes from per_url's own materializing job
+    (an observed row count), so the per_url phase of every wave starts
+    exactly the jobs of its eager checkpoint: no count() over the
+    checkpoint afterwards. Jobs are counted on the JVM scheduler's job
+    id counter; the flush runs inline, so no background write lands
+    inside the phase."""
+    from concurrent.futures import Future
+
+    from kryptone_spark.plans import waves
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    eager_cuts = []  # (jobs before, jobs after) per eager checkpoint
+    cut = waves.checkpoint_cut
+
+    def counting_cut(df, eager=False):
+        before = dag.nextJobId()
+        out = cut(df, eager=eager)
+        if eager:
+            eager_cuts.append((before, dag.nextJobId()))
+        return out
+
+    class Inline:
+        def submit(self, fn, *args):
+            f = Future()
+            f.set_result(fn(*args))
+            return f
+
+    marks = []  # (phase, jobs so far) as each phase's wall is booked
+
+    class JobMarks(dict):
+        def __missing__(self, key):
+            return 0.0
+
+        def __setitem__(self, key, value):
+            marks.append((key, dag.nextJobId()))
+            super().__setitem__(key, value)
+
+    monkeypatch.setattr(waves, "checkpoint_cut", counting_cut)
+    config = CrawlConfig(start_urls=["http://sitea.test/"], ignore_images=True)
+    runner = WaveRunner(
+        spark, config, site_df(spark, site), TableIO(spark, str(tmp_path))
+    )
+    runner._flush_executor = Inline()
+    runner.phase_seconds = JobMarks()
+    result = runner.run(max_waves=3)
+    assert len(result.waves) == 3
+    phases = [
+        (start, end)
+        for (p0, start), (p1, end) in zip(marks, marks[1:])
+        if (p0, p1) == ("admission", "per_url")
+    ]
+    assert len(phases) == 3, marks
+    for start, end in phases:
+        # the phase's jobs are exactly one eager checkpoint's jobs
+        assert end > start and (start, end) in eager_cuts, (start, end, eager_cuts)
+
+
 def test_resume_mid_crawl(spark, site, tmp_path):
     """Kill after wave 1, resume → identical final state to a full run."""
     config = CrawlConfig(start_urls=["http://sitea.test/"], ignore_images=True)

@@ -206,6 +206,34 @@ def test_politeness_schedule_wave_invariant_codegen(spark):
     assert dim == ["LocalTableScan"], dim
 
 
+def test_robots_path_parse_only_behind_prefilter(spark):
+    """The robots verdict's path parse (``regexp_extract``) sits only in
+    the THEN branch of a CASE WHEN whose condition is the ``Contains``
+    prefilter, and in no operator other than the robots filter. The
+    verdict is evaluated in the filters themselves, so the blocked and
+    the batch side each carry it once."""
+    frontier = _toy_frontier(spark)
+    robots = spark.sql(
+        "SELECT * FROM VALUES ('site3.test', array('/p-1'), 2.0) "
+        "AS t(domain, disallow, crawl_delay)"
+    )
+    config = CrawlConfig(max_per_domain_per_wave=20, wait_time=1.0)
+    batch, blocked = schedule.politeness_schedule(
+        frontier, config, wave=0, robots=robots, global_rank=False
+    )
+    for df in (batch, blocked):
+        parsing = [
+            (op, detail) for op, detail in plan_nodes(plan_of(df))
+            if "regexp_extract" in detail
+        ]
+        assert [op for op, _ in parsing] == ["Filter"], parsing
+        cond = parsing[0][1].split("Condition : ", 1)[1]
+        when, then = cond.split(" THEN ", 1)
+        assert "CASE WHEN" in when and "Contains(url" in when, cond
+        assert "regexp_extract" not in when, cond
+        assert "regexp_extract" in then and then.rstrip().endswith("ELSE false END, false)"), cond
+
+
 def test_literal_frame_is_a_local_relation(spark):
     """Driver-built frames keep row order (more than four rows: Spark
     binds positional VALUES markers out of order), exact doubles and
