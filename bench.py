@@ -168,7 +168,7 @@ def bench_crawl_loop(spark, n_products: int) -> dict:
     warm_dir = tempfile.mkdtemp(prefix="bench_crawl_warm_")
     io_w = TableIO(spark, warm_dir)
     WaveRunner(
-        spark, config, warm_docs, io_w, collect_stats=False, global_rank=False
+        spark, config, warm_docs, io_w, global_rank=False
     ).run()
 
     # page_size = n_products → ONE wide list page, so the BFS is 4-5
@@ -190,14 +190,12 @@ def bench_crawl_loop(spark, n_products: int) -> dict:
             crawl_dir = tempfile.mkdtemp(prefix="bench_crawl_")
             try:
                 io = TableIO(spark, crawl_dir)
-                # production posture: per-wave counts live in the
-                # lineage table, not driver aggs (collect_stats=False);
-                # per-domain rank is the only ordering politeness needs
-                # (global_rank=False)
+                # production posture: per-domain rank is the only
+                # ordering politeness needs (global_rank=False)
                 t = time.time()
                 result = WaveRunner(
                     spark, config, docs, io,
-                    collect_stats=False, global_rank=False,
+                    global_rank=False,
                 ).run()
                 best = min(best, time.time() - t)
             finally:
@@ -237,7 +235,7 @@ def bench_crawl_loop_big(spark, n_products: int) -> dict:
         io = TableIO(spark, crawl_dir)
         t = time.time()
         result = WaveRunner(
-            spark, config, docs, io, collect_stats=False, global_rank=False,
+            spark, config, docs, io, global_rank=False,
         ).run()
         sec = time.time() - t
     finally:

@@ -1,24 +1,32 @@
 """WaveRunner — the iterative crawl dataflow (SURVEY.md §3.1 engine form).
 
-One wave = one pure DataFrame job:
+One wave = one pure DataFrame job, written as named stages that
+``WaveRunner.run_wave`` calls in order:
 
-    pending  = frontier − visited − robots_blocked        (anti-joins)
-    batch    = politeness_schedule(pending)               (W1 window)
-    docs     = batch ⋈ documents                          (the "browser"
-               is a table lookup — fetch results are the synthetic
-               interleaved documents; a missing doc behaves like an
-               empty 404 body, links = ∅)
-    visited ∪= batch                                      (base.py:1121)
-    links    = explode(spans)[kind='link']                (S7)
-    admitted = admission.admit(links, seen, visited_pre)  (P1-P13)
-    frontier ∪= admitted.valid ∧ ¬filtered                (add_urls)
-    seen    ∪= admitted                                   (P12)
+    pending  = frontier − visited − robots_blocked − retired  (pending_frontier)
+    batch    = politeness_schedule(pending) + fetch attempts  (_schedule, W1)
+    failed   = batch[failed attempt] → fetch_failed, backoff  (_split_failures)
+    docs     = batch ⋈ documents; links = explode(spans)      (fetch_links, S7)
+               (the "browser" is a table lookup — fetch results are
+               the synthetic interleaved documents; a missing doc
+               behaves like an empty 404 body, links = ∅)
+    pairs    = MinHash probe of the wave's page texts         (_dedup, opt-in)
+    admitted = admission.admit(links, seen, visited_pre)      (admit_links, P1-P13)
+    per_url  = per-URL any-valid agg of admitted              (per_url_rows)
+    Δseen, Δfrontier = per_url − seen                         (state_deltas, P12)
+    visited ∪= batch; seen ∪= Δseen; frontier ∪= Δfrontier    (FoldedState.append)
+    lineage  = per-bucket audit of admitted                   (lineage_rows)
+
+``streaming/ingest.py:run_crawl_ingest`` folds each fetch-result
+micro-batch through the same fetch_links → admit_links →
+per_url_rows → state_deltas → FoldedState stages; only pending and the
+schedule belong to the batch loop alone.
 
 State lives in memory as per-wave union DataFrames whose lineage is cut
 with ``localCheckpoint`` (the classic iterative-algorithm pattern), and
-is flushed to APPEND-ONLY tables with one parquet partition per wave
-(TableIO) every ``checkpoint_interval`` waves. A flush writes lineage
-LAST — its presence marks the wave committed, which is the
+every wave's deltas are flushed to APPEND-ONLY tables with one parquet
+partition per wave (TableIO) on a background thread. A flush writes
+lineage LAST — its presence marks the wave committed, which is the
 checkpoint/resume contract. The reference instead rewrites its whole
 frontier JSON every iteration (/root/reference/kryptone/base.py:562-575).
 
@@ -29,15 +37,15 @@ Scale notes (10^10 frontier):
   candidate↔seen anti-join (bloom-prefiltered via operators/seen.py
   when `use_bloom=True`), and the batch↔documents join.
 - driver holds scalars only (counts, wave offsets) — no collect() of
-  URL lists anywhere. Per-wave Spark jobs are batched: one materialize
-  + two aggs per wave, so the loop's fixed overhead stays flat as the
-  wave size grows.
+  URL lists anywhere — taken from jobs the wave runs anyway: the batch
+  checkpoint's stats agg and the per_url checkpoint's observation.
 """
 
 from __future__ import annotations
 
 import time
 from collections import defaultdict
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -73,6 +81,16 @@ class CrawlResult:
 # well under executor broadcast budgets, O(1) copies per executor.
 # Wider waves fill every core anyway, so the plain join wins there.
 _SEMI_BCAST_MAX_ROWS = 1_000_000
+
+# appends per state union between folds (FoldedState)
+FOLD_STATE_EVERY = 16
+
+
+def _width(rows: int, parallelism: int) -> int:
+    """Partitions for a wave-sized frame: ~2k rows per task, capped at
+    ``parallelism`` so a 10^8-row wave on a real cluster keeps every
+    executor busy."""
+    return max(1, min(parallelism, (rows + 2047) // 2048))
 
 
 def fetch_documents_join(
@@ -138,6 +156,291 @@ def cluster_documents_on_id(spark: SparkSession, documents: DataFrame) -> DataFr
         spark.conf.set(key, prev)
 
 
+# ---- wave stages shared by the batch loop and streaming ingest ---------
+
+
+class FoldedState(dict):
+    """Cumulative in-memory crawl state, ``name → DataFrame | None``:
+    the union of every lineage-cut delta appended to it.
+
+    Deep-crawl guard: each append adds a ~shuffle.partitions-wide
+    checkpointed segment, so after k appends a scan carries O(k) union
+    segments and O(k * width) mostly-empty tasks — a 120-wave
+    pagination chain paid O(waves^2) driver time (measured:
+    tools/probe_deep_crawl). Every ``fold_every`` appends to a state,
+    its union is coalesced to defaultParallelism and checkpointed: plan
+    depth and task count reset to O(1) segments at the cost of one
+    re-materialization of that state per fold (amortized O(state ×
+    waves / fold_every) — the same bound a periodic table compaction
+    pays). 0 disables folding."""
+
+    def __init__(self, names, fold_every: int = FOLD_STATE_EVERY):
+        super().__init__(dict.fromkeys(names))
+        self.fold_every = max(0, fold_every)
+        self._appends: dict[str, int] = defaultdict(int)
+
+    def append(self, name: str, delta: DataFrame) -> None:
+        delta = delta.transform(checkpoint_cut)
+        cur = self[name]
+        merged = delta if cur is None else cur.unionByName(delta)
+        self._appends[name] += 1
+        if self.fold_every and self._appends[name] >= self.fold_every:
+            # Narrow coalesce — no shuffle; materializes lazily on the
+            # next wave's first job over this state.
+            par = delta.sparkSession.sparkContext.defaultParallelism
+            merged = merged.coalesce(max(1, par)).transform(checkpoint_cut)
+            self._appends[name] = 0
+        self[name] = merged
+
+
+def seed_rows(spark: SparkSession, config: CrawlConfig) -> tuple[DataFrame, DataFrame]:
+    """before_start (base.py:1006-1051): admit the seed list with the
+    home page allowed (iteration_count == 0). Returns the wave-0
+    ``(seen_rows, frontier_rows)``."""
+    seeds = list(dict.fromkeys(config.start_urls))
+    # Eager checkpoint: without it the seed arm of the frontier union
+    # carries the FULL admission expression tree, and every wave's
+    # schedule plan re-optimizes over it — predicate pushdown merges
+    # that wave's pending filters into the seed arm's filter,
+    # generating a fresh multi-MB SpecificPredicate (9.2 MB measured)
+    # that Janino recompiles per wave (~2 s), on top of re-EVALUATING
+    # the seed admission chain every wave. Checkpointed, the arm is an
+    # O(#seeds) LogicalRDD: the giant expression runs exactly once, at
+    # seed time.
+    admitted = admission.admit(
+        from_list(spark, seeds), config, allow_home=True
+    ).transform(checkpoint_cut, eager=True)
+    seen = admitted.select(
+        "url", "domain_bucket",
+        F.lit(0).alias("first_wave"),
+        F.col("verdict"),
+    )
+    frontier = admitted.where(
+        (F.col("verdict") == "valid") & ~F.col("filtered")
+    ).select(
+        "url", "domain", "domain_bucket",
+        F.lit(0).alias("depth"),
+        F.lit(0).alias("discovered_wave"),
+        F.lit(0.0).alias("priority"),
+    )
+    return seen, frontier
+
+
+def fetch_links(
+    batch: DataFrame, documents: DataFrame, config: CrawlConfig, fetched: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Fetch stage: right-size the batch of ``fetched`` pages, look
+    them up in the documents table and explode their link spans.
+    Returns ``(batch, docs, links)``. The coalesce is narrow and never
+    raises the width: a checkpointed batch carries shuffle.partitions
+    partitions whatever its row count, and every downstream stage
+    inherits that width (a 500-page wave on 32 tasks is pure
+    task-launch overhead)."""
+    par = batch.sparkSession.sparkContext.defaultParallelism
+    nparts = _width(fetched, par)
+    batch = batch.coalesce(nparts)
+    docs = fetch_documents_join(
+        batch, documents, nparts=nparts, fetched=fetched, parallelism=par
+    )
+    links = (
+        docs.select(F.col("url").alias("src_url"), F.explode_outer("spans").alias("s"))
+        .where(F.col("s.kind") == "link")
+        .select("src_url", F.col("s.media_ref").alias("url"))
+    )
+    # trap gate (opt-in, engine-only): like gather_filter, dropped
+    # URLs never reach the seen set — and being pre-admission, they
+    # never cost a bloom probe either. Shuffle-free projection.
+    if config.trap_threshold is not None:
+        from kryptone_spark.operators.traps import trap_filter
+
+        links = trap_filter(links, threshold=config.trap_threshold)
+    return batch, docs, links
+
+
+def admit_links(
+    links: DataFrame,
+    config: CrawlConfig,
+    *,
+    seen: DataFrame | None,
+    visited: DataFrame | None,
+    allow_home: bool | str,
+    bloom_sidecar: DataFrame | None = None,
+) -> DataFrame:
+    """Admission stage (P1-P13) of a wave's links against the PRE-wave
+    seen and visited states, bloom-prefiltered when a sidecar is given."""
+    seen_urls = seen.select("url") if seen is not None else None
+    if bloom_sidecar is not None:
+        from kryptone_spark.operators.seen import bloom_prefilter
+
+        admitted = bloom_prefilter(
+            links, seen_urls, config, visited=visited,
+            allow_home=allow_home, sidecar=bloom_sidecar,
+        )
+    else:
+        admitted = admission.admit(
+            links, config, seen=seen_urls,
+            visited=visited.select("url") if visited is not None else None,
+            allow_home=allow_home,
+        )
+    return admitted
+
+
+def per_url_rows(admitted: DataFrame) -> tuple[DataFrame, dict[str, int]]:
+    """Per-URL stage: one row per admitted URL, any-valid wins (the
+    oracle's sorted per-page processing: only the home rule is
+    src-dependent). Returns ``(per_url, counts)`` — ``n`` URLs,
+    ``candidates`` admitted links and ``new_frontier`` valid unfiltered
+    links, observed in the checkpoint's own job. Eager: both state
+    deltas derive from it and concurrent flush threads write them."""
+    out = (F.col("verdict") == "valid") & ~F.col("filtered")
+    obs = Observation()
+    per_url = (
+        admitted.groupBy("url", "domain", "domain_bucket")
+        .agg(
+            F.max(F.col("verdict") == "valid").alias("is_valid"),
+            F.max(F.col("filtered")).alias("filtered"),
+            F.count("*").alias("__in"),
+            F.sum(out.cast("long")).alias("__out"),
+        )
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum("__in").alias("candidates"),
+            F.sum("__out").alias("new_frontier"),
+        )
+        .drop("__in", "__out")
+        .transform(checkpoint_cut, eager=True)
+    )
+    return per_url, {k: int(v or 0) for k, v in obs.get.items()}
+
+
+def state_deltas(
+    per_url: DataFrame, n_urls: int, seen: DataFrame | None, wave: int
+) -> tuple[DataFrame, DataFrame]:
+    """Delta stage: ``(seen_rows, new_frontier)`` of one wave's
+    ``n_urls`` per-URL rows, first seen in wave ``wave + 1``. Sized
+    from ``n_urls``, not the page count: a 10-hub wave emitting 10^5
+    links must not coalesce its deltas (and the next wave's frontier
+    scan) onto one task."""
+    width = _width(n_urls, per_url.sparkSession.sparkContext.defaultParallelism)
+    seen_rows = per_url.select(
+        "url", "domain_bucket",
+        F.lit(wave + 1).alias("first_wave"),
+        F.when(F.col("is_valid"), F.lit("valid")).otherwise(F.lit("rejected")).alias("verdict"),
+    )
+    # first_wave means FIRST: a re-encountered URL appends no seen row
+    # — duplicates would multiply every candidate through admission's
+    # membership left-join. P12's set union is an anti-join here.
+    if seen is not None:
+        seen_rows = seen_rows.join(seen.select("url"), "url", "left_anti")
+    # cut ONCE: bloom sidecar build, state union and delta write reuse it
+    seen_rows = seen_rows.coalesce(width).transform(checkpoint_cut)
+    new_frontier = per_url.where(F.col("is_valid") & ~F.col("filtered")).select(
+        "url", "domain", "domain_bucket",
+        F.lit(wave + 1).alias("depth"),
+        F.lit(wave + 1).alias("discovered_wave"),
+        F.lit(0.0).alias("priority"),
+    ).coalesce(width)
+    return seen_rows, new_frontier
+
+
+# ---- batch-loop stages ---------------------------------------------------
+
+# The lineage filter vocabulary: the closed admission reason set
+# (admission.py checks list) + the post-seen ignore_test verdict, kept
+# static so the lineage schema never varies with CrawlConfig.
+_FC_KEYS = (
+    "refresh_seen", "domain", "empty", "fragment", "home",
+    "image", "visited", "seen", "rule", "ignore_test",
+)
+
+
+def lineage_rows(admitted: DataFrame, wave: int) -> DataFrame:
+    """Lineage stage: the per-bucket admission audit of one wave
+    (urls_in/out + per-filter cardinality). Conditional sums
+    partial-aggregate map-side, so it is one shuffle."""
+    fc_sums = [
+        F.sum(
+            (F.col("filtered") if k == "ignore_test"
+             else (F.col("reject_reason") == k)).cast("long")
+        ).alias(f"__fc_{k}")
+        for k in _FC_KEYS
+    ]
+    return (
+        admitted.groupBy("domain_bucket")
+        .agg(
+            F.count("*").alias("urls_in"),
+            F.sum(
+                ((F.col("verdict") == "valid") & ~F.col("filtered")).cast("long")
+            ).alias("urls_out"),
+            *fc_sums,
+        )
+        .select(
+            F.lit(wave).alias("wave_id"),
+            F.col("domain_bucket").alias("partition_id"),
+            "urls_in", "urls_out",
+            F.map_from_arrays(
+                F.array(*[F.lit(k) for k in _FC_KEYS]),
+                F.array(*[F.col(f"__fc_{k}") for k in _FC_KEYS]),
+            ).alias("filter_cardinality"),
+            F.current_timestamp().alias("ts"),
+        )
+    )
+
+
+def pending_frontier(
+    state: FoldedState, fail_counts: DataFrame | None, max_retries: int
+) -> DataFrame:
+    """Pending stage: frontier − visited − robots_blocked − URLs whose
+    failures exhausted the retry budget (count > max_retries); the
+    still-retryable reschedule, one wave per attempt."""
+    pending = state["frontier"]
+    for name in ("visited", "robots_blocked"):
+        if state[name] is not None:
+            pending = pending.join(state[name].select("url"), "url", "left_anti")
+    if fail_counts is not None:
+        retired = fail_counts.where(F.col("__nf") > max_retries)
+        pending = pending.join(retired.select("url"), "url", "left_anti")
+    return pending
+
+
+def mark_attempts(
+    batch: DataFrame, failures: DataFrame, fail_counts: DataFrame | None
+) -> DataFrame:
+    """Attempt number = prior failures + 1; the first ``n_failures``
+    attempts at a URL fail (``__failed``). ``failures`` is broadcast —
+    it's the error-prone slice of the corpus, not the corpus — and
+    prior counts are O(#failing urls)."""
+    b = batch.join(
+        F.broadcast(failures.select("url", "n_failures")), "url", "left"
+    )
+    prior = F.lit(0)
+    if fail_counts is not None:
+        b = b.join(fail_counts, "url", "left")
+        prior = F.coalesce(F.col("__nf"), F.lit(0))
+    return b.withColumns({
+        "__attempt": prior + 1,
+        "__failed": prior + 1 <= F.coalesce(F.col("n_failures"), F.lit(0)),
+    }).drop("n_failures", "__nf")
+
+
+def domain_backoff(failed: DataFrame, factor: float) -> DataFrame:
+    """crawl_delay multiplier per domain from ONE wave's k failed
+    attempts, ``factor ** min(k, 6)``: rebuilt each wave, so a clean
+    wave resets the delay, and capped so one bad wave can't freeze a
+    domain out."""
+    return (
+        failed.groupBy("domain")
+        .agg(
+            F.pow(
+                F.lit(float(factor)),
+                F.least(F.count("*"), F.lit(6)).cast("double"),
+            ).alias("backoff_mult")
+        )
+        .transform(checkpoint_cut)
+    )
+
+
 # state tables flushed per wave; lineage last = commit marker
 _DELTA_TABLES = (
     "fetch_batches", "visited", "seen", "frontier",
@@ -155,17 +458,12 @@ class WaveRunner:
         io: TableIO,
         robots: DataFrame | None = None,
         use_bloom: bool = False,
-        checkpoint_interval: int = 1,
-        write_edges: bool = True,
-        collect_stats: bool = True,
         global_rank: bool = True,
         priority: str = "fifo",
-        rank_every: int = 1,
         compact_every: int = 0,
         fetch_failures: DataFrame | None = None,
         dedup: bool = False,
-        dedup_max_bucket: int | None = None,
-        fold_state_every: int = 16,
+        fold_state_every: int = FOLD_STATE_EVERY,
         cluster_documents: bool = False,
     ):
         self.spark = spark
@@ -186,12 +484,6 @@ class WaveRunner:
         self.io = io
         self.robots = robots
         self.use_bloom = use_bloom
-        self.checkpoint_interval = max(1, checkpoint_interval)
-        self.write_edges = write_edges
-        # collect_stats=False skips the per-wave candidate/out-count
-        # driver agg (one Spark job per wave); the same numbers are
-        # durable in the lineage table, so monitoring reads them there.
-        self.collect_stats = collect_stats
         # rank_in_wave (the oracle's lexicographic order) costs a
         # two-phase range rank per wave — one extra materialization +
         # O(partitions) offset collect (functions/rank.py). Parity runs
@@ -201,13 +493,12 @@ class WaveRunner:
         # frontier ordering: "fifo" is the reference-parity contract
         # (priority 0 everywhere → lexicographic within a wave);
         # "pagerank" is the engine-only link-evidence priority queue —
-        # every `rank_every` waves the accumulated edge graph is
-        # re-ranked (operators/linkgraph.py) and pending URLs fetch in
-        # descending rank order under the same politeness budget.
+        # every wave the accumulated edge graph is re-ranked
+        # (operators/linkgraph.py) and pending URLs fetch in descending
+        # rank order under the same politeness budget.
         if priority not in ("fifo", "pagerank"):
             raise ValueError(f"priority must be fifo|pagerank, got {priority!r}")
         self.priority = priority
-        self.rank_every = max(1, rank_every)
         self.compact_every = max(0, compact_every)
         # per-domain fetched totals (O(#domains), broadcast into the
         # scheduler when max_pages_per_domain is set)
@@ -248,26 +539,13 @@ class WaveRunner:
         # batch's text (O(|batch|), never the corpus) + one broadcast-
         # pruned bucket join.
         self.dedup = dedup
-        self.dedup_max_bucket = dedup_max_bucket
-        # cumulative in-memory state (lineage-cut per wave)
-        self._state: dict[str, DataFrame | None] = {
-            "seen": None, "visited": None, "frontier": None,
-            "robots_blocked": None, "fetch_failed": None,
-            "dedup_index": None,
-        }
-        # Deep-crawl guard: each wave appends a ~shuffle.partitions-wide
-        # checkpointed delta to every state union, so at wave k the
-        # frontier/visited/seen scans carry O(k) union segments and
-        # O(k * width) mostly-empty tasks — a 120-wave pagination chain
-        # paid O(waves^2) driver time (measured: tools/probe_deep_crawl).
-        # Every `fold_state_every` appends per state, the union itself is
-        # coalesced to defaultParallelism and checkpointed: plan depth
-        # and task count reset to O(1) segments at the cost of one
-        # re-materialization of that state per fold (amortized O(state ×
-        # waves / fold_every) — the same bound a periodic table compaction
-        # pays). 0 disables folding.
-        self.fold_state_every = max(0, fold_state_every)
-        self._state_appends: dict[str, int] = defaultdict(int)
+        # cumulative in-memory state (lineage-cut per wave, folded
+        # every fold_state_every appends; 0 disables folding)
+        self._state = FoldedState(
+            ("seen", "visited", "frontier", "robots_blocked",
+             "fetch_failed", "dedup_index"),
+            fold_every=fold_state_every,
+        )
         # per-wave deltas not yet flushed: (table, partition_wave, df,
         # commit_group) — commit_group is the wave that PRODUCED the
         # delta (seen/frontier deltas of wave k land in partition k+1
@@ -290,25 +568,6 @@ class WaveRunner:
         self._flush_futures: list[Future] = []
 
     # ---- state helpers ---------------------------------------------------
-
-    def _append_state(self, name: str, delta: DataFrame) -> None:
-        delta = delta.transform(checkpoint_cut)
-        cur = self._state[name]
-        merged = delta if cur is None else cur.unionByName(delta)
-        self._state_appends[name] += 1
-        if (
-            self.fold_state_every
-            and self._state_appends[name] >= self.fold_state_every
-        ):
-            # fold: collapse the O(appends)-segment union into one
-            # right-width checkpointed scan (see __init__ note). Narrow
-            # coalesce — no shuffle; materializes lazily on the next
-            # wave's first job over this state.
-            merged = merged.coalesce(
-                max(1, self.spark.sparkContext.defaultParallelism)
-            ).transform(checkpoint_cut)
-            self._state_appends[name] = 0
-        self._state[name] = merged
 
     def _queue_flush(self, name: str, wave: int, df: DataFrame, group: int) -> None:
         self._pending_flush.append((name, wave, df, group))
@@ -369,83 +628,85 @@ class WaveRunner:
         self._flush_async()
         self._raise_flush_errors(wait=True)
 
+    @contextmanager
+    def _phase(self, name: str):
+        """Book the block's wall time to ``phase_seconds[name]``."""
+        t = time.perf_counter()
+        yield
+        self.phase_seconds[name] += time.perf_counter() - t
+
     # ---- bootstrap ---------------------------------------------------
 
     def seed(self) -> None:
-        """before_start (base.py:1006-1051): admit the seed list with
-        the home page allowed (iteration_count == 0)."""
-        seeds = list(dict.fromkeys(self.config.start_urls))
-        df = from_list(self.spark, seeds)
-        # Eager checkpoint: without it the seed arm of the frontier
-        # union carries the FULL admission expression tree, and every
-        # wave's schedule plan re-optimizes over it — predicate
-        # pushdown merges that wave's pending filters into the seed
-        # arm's filter, generating a fresh multi-MB SpecificPredicate
-        # (9.2 MB measured) that Janino recompiles per wave (~2 s), on
-        # top of re-EVALUATING the seed admission chain every wave.
-        # Checkpointed, the arm is an O(#seeds) LogicalRDD: the giant
-        # expression runs exactly once, at seed time.
-        admitted = admission.admit(df, self.config, allow_home=True).transform(
-            checkpoint_cut, eager=True
-        )
-        seen_rows = admitted.select(
-            "url", "domain_bucket",
-            F.lit(0).alias("first_wave"),
-            F.col("verdict"),
-        )
-        frontier_rows = (
-            admitted.where((F.col("verdict") == "valid") & ~F.col("filtered"))
-            .select(
-                "url", "domain", "domain_bucket",
-                F.lit(0).alias("depth"),
-                F.lit(0).alias("discovered_wave"),
-                F.lit(0.0).alias("priority"),
-            )
-        )
-        self._append_state("seen", seen_rows)
-        self._append_state("frontier", frontier_rows)
-        self._queue_flush("seen", 0, seen_rows, group=-1)
-        self._queue_flush("frontier", 0, frontier_rows, group=-1)
+        seen, frontier = seed_rows(self.spark, self.config)
+        self._state.append("seen", seen)
+        self._state.append("frontier", frontier)
+        self._queue_flush("seen", 0, seen, group=-1)
+        self._queue_flush("frontier", 0, frontier, group=-1)
 
     # ---- one wave -------------------------------------------------------
 
     def run_wave(self, wave: int) -> WaveSummary | None:
-        t0 = time.perf_counter()
-        frontier = self._state["frontier"]
-        if frontier is None:
+        if self._state["frontier"] is None:
             return None
-        visited = self._state["visited"]
-        blocked = self._state["robots_blocked"]
-
-        pending = frontier
-        if visited is not None:
-            pending = pending.join(visited.select("url"), "url", "left_anti")
-        if blocked is not None:
-            pending = pending.join(blocked.select("url"), "url", "left_anti")
-        # retire URLs whose failure count exhausted the retry budget
-        # (count > max_retries); still-retryable URLs stay pending and
-        # reschedule this wave — backoff is one wave per attempt
-        failed = self._state["fetch_failed"]
-        if failed is not None:
-            retired = (
-                failed.groupBy("url")
-                .agg(F.count("*").alias("__nf"))
-                .where(F.col("__nf") > self.config.max_retries)
+        with self._phase("schedule"):
+            batch, stats = self._schedule(wave)
+        if stats["n"] == 0:
+            # nothing schedulable at all — the crawl is drained
+            self.flush()
+            return None
+        fetched = int(stats["n_ok"] or 0)
+        with self._phase("admission"):
+            batch = self._split_failures(wave, batch)
+            batch, docs, links = fetch_links(batch, self.documents, self.config, fetched)
+            self._record_batch(wave, batch)
+            if self.dedup:
+                with self._phase("dedup"):
+                    self._dedup(wave, docs)
+            admitted = self._admit(links, self._home_anchor(stats, fetched))
+        with self._phase("per_url"):
+            per_url, counts = per_url_rows(admitted)
+        with self._phase("state_build"):
+            seen_rows, new_frontier = state_deltas(
+                per_url, counts["n"], self._state["seen"], wave
             )
-            pending = pending.join(retired.select("url"), "url", "left_anti")
+            self._append_wave(
+                wave, batch, admitted, seen_rows, new_frontier, counts["candidates"]
+            )
+        with self._phase("flush"):
+            self._flush_async()
+        dur = float(stats["dur"] or 0.0)
+        self._offset += dur
+        return WaveSummary(
+            wave, fetched, counts["candidates"], counts["new_frontier"], dur
+        )
 
+    # ---- stages that read or write the runner's state --------------------
+
+    def _failure_counts(self) -> DataFrame | None:
+        """Failed attempts per URL (``url, __nf``): one frame per wave for
+        the retry budget and the attempt numbers."""
+        failed = self._state["fetch_failed"]
+        if failed is None:
+            return None
+        return failed.groupBy("url").agg(F.count("*").alias("__nf"))
+
+    def _schedule(self, wave: int):
+        """Schedule stage: pending → politeness window → attempt marks →
+        cut, then ONE job that materializes the cut AND collects the
+        driver's scalars (count, virtual duration, first successful URL
+        = home-rule anchor). Returns ``(batch, stats)``."""
+        fail_counts = self._failure_counts()
+        pending = pending_frontier(self._state, fail_counts, self.config.max_retries)
         if self.priority == "pagerank":
             from kryptone_spark.operators import linkgraph
 
-            if self._edges_acc is not None and wave % self.rank_every == 0:
+            if self._edges_acc is not None:
                 # rank over everything discovered so far; checkpoint so
                 # the power-iteration DAG isn't replayed per consumer
-                self._ranks = checkpoint_cut(
-                    linkgraph.pagerank(self._edges_acc)
-                )
+                self._ranks = checkpoint_cut(linkgraph.pagerank(self._edges_acc))
             if self._ranks is not None:
                 pending = linkgraph.prioritize_frontier(pending, self._ranks)
-
         batch, new_blocked = schedule.politeness_schedule(
             pending, self.config, wave, robots=self.robots,
             wave_start_offset=self._offset, global_rank=self.global_rank,
@@ -454,105 +715,48 @@ class WaveRunner:
             domain_backoff=self._domain_backoff,
         )
         if self.fetch_failures is not None:
-            # attempt number = prior failures + 1; the first n_failures
-            # attempts fail. Both dims are joined onto the wave-sized
-            # batch (failures is broadcast — it's the error-prone slice
-            # of the corpus, not the corpus); prior counts are
-            # O(#failing urls).
-            b = batch.join(
-                F.broadcast(self.fetch_failures.select("url", "n_failures")),
-                "url", "left",
-            )
-            if failed is not None:
-                prior = failed.groupBy("url").agg(F.count("*").alias("__pf"))
-                b = b.join(prior, "url", "left")
-            else:
-                b = b.withColumn("__pf", F.lit(None).cast("long"))
-            batch = (
-                b.withColumn("__attempt", F.coalesce(F.col("__pf"), F.lit(0)) + 1)
-                .withColumn(
-                    "__failed",
-                    F.col("__attempt") <= F.coalesce(F.col("n_failures"), F.lit(0)),
-                )
-                .drop("n_failures", "__pf")
-            )
+            batch = mark_attempts(batch, self.fetch_failures, fail_counts)
         batch = batch.transform(checkpoint_cut)
-        # one job: materializes the lazy checkpoint AND collects the
-        # scalars the driver needs (count, virtual duration, and the
-        # lexicographically-first URL = rank_in_wave 0, for the wave-0
-        # home-page rule) — no separate first() job.
-        ok_expr = (
-            ~F.col("__failed") if self.fetch_failures is not None else F.lit(True)
-        )
+        ok = ~F.col("__failed") if self.fetch_failures is not None else F.lit(True)
         stats = batch.agg(
             F.count("*").alias("n"),
-            F.sum(ok_expr.cast("long")).alias("n_ok"),
+            F.sum(ok.cast("long")).alias("n_ok"),
             F.max(F.col("rank_in_domain") * F.col("crawl_delay")).alias("dur"),
             # min over SUCCESSFUL rows: a failed fetch processes no
             # links, so it can never be the home-rule anchor page
-            F.min(F.when(ok_expr, F.col("url"))).alias("first_ok_url"),
+            F.min(F.when(ok, F.col("url"))).alias("first_ok_url"),
         ).collect()[0]
-        scheduled = stats["n"]
-        fetched = int(stats["n_ok"] or 0)
-        t1 = time.perf_counter()
-        self.phase_seconds["schedule"] += t1 - t0
         if self.robots is not None or self.config.max_pages_per_domain is not None:
-            self._append_state("robots_blocked", new_blocked)
+            self._state.append("robots_blocked", new_blocked)
             self._queue_flush("robots_blocked", wave, new_blocked, group=wave)
-        if scheduled == 0:
-            # nothing schedulable at all — the crawl is drained
-            self.flush()
-            return None
-        if self.fetch_failures is not None:
-            # failed attempts: recorded (url, wave, attempt) — they
-            # consumed their politeness slot (fetch_at kept so resume
-            # rebuilds the virtual clock over successes AND failures),
-            # are NOT visited, and produce no links. An all-failed wave
-            # still completes (empty downstream, lineage committed) so
-            # retryable URLs get their next attempt next wave.
-            failed_now = batch.where(F.col("__failed")).select(
-                "url", "domain", "domain_bucket",
-                F.col("wave"),
-                F.col("__attempt").cast("int").alias("attempt"),
-                "fetch_at", "crawl_delay",
-            ).transform(checkpoint_cut)
-            # in-memory state drops the wave col so it unions cleanly
-            # with a resume()-reloaded table (read() strips the wave
-            # partition the same way — mirrors the visited pattern)
-            self._append_state("fetch_failed", failed_now.drop("wave"))
-            self._queue_flush("fetch_failed", wave, failed_now, group=wave)
-            if self.config.failure_backoff is not None:
-                # rebuild (not accumulate) each wave: a clean wave
-                # resets the domain to its normal delay. min(k, 6)
-                # caps the exponent so one pathological wave can't
-                # freeze a domain out numerically.
-                self._domain_backoff = (
-                    failed_now.groupBy("domain")
-                    .agg(
-                        F.pow(
-                            F.lit(float(self.config.failure_backoff)),
-                            F.least(F.count("*"), F.lit(6)).cast("double"),
-                        ).alias("backoff_mult")
-                    )
-                    .transform(checkpoint_cut)
-                )
-            batch = batch.where(~F.col("__failed")).drop("__attempt", "__failed")
+        return batch, stats
 
-        # Right-size the wave: the checkpointed batch carries
-        # shuffle.partitions partitions regardless of row count, and
-        # every downstream stage (link explode, admission, per-URL agg,
-        # the six delta writes) inherits that width. A 500-page wave on
-        # 32 partitions is pure task-launch overhead — coalesce (narrow,
-        # no shuffle) to ~2k pages/task, capped at defaultParallelism so
-        # a 10^8-URL wave on a real cluster keeps every executor busy.
-        nparts = max(1, min(
-            self.spark.sparkContext.defaultParallelism,
-            (fetched + 2047) // 2048,
-        ))
-        # coalesce never raises the partition count, so no width probe
-        # is needed: when the batch is already narrower this is a no-op
-        batch = batch.coalesce(nparts)
+    def _split_failures(self, wave: int, batch: DataFrame) -> DataFrame:
+        """Failure stage: returns the successful fetches. Failed attempts
+        are recorded (url, wave, attempt, fetch_at — resume rebuilds the
+        virtual clock over them too), are NOT visited and produce no
+        links; an all-failed wave still commits, so retries proceed."""
+        if self.fetch_failures is None:
+            return batch
+        failed_now = batch.where(F.col("__failed")).select(
+            "url", "domain", "domain_bucket",
+            F.col("wave"),
+            F.col("__attempt").cast("int").alias("attempt"),
+            "fetch_at", "crawl_delay",
+        ).transform(checkpoint_cut)
+        # in-memory state drops the wave col so it unions cleanly with a
+        # resume()-reloaded table (read() strips the wave partition the
+        # same way — mirrors the visited pattern)
+        self._state.append("fetch_failed", failed_now.drop("wave"))
+        self._queue_flush("fetch_failed", wave, failed_now, group=wave)
+        if self.config.failure_backoff is not None:
+            self._domain_backoff = domain_backoff(
+                failed_now, self.config.failure_backoff
+            )
+        return batch.where(~F.col("__failed")).drop("__attempt", "__failed")
 
+    def _record_batch(self, wave: int, batch: DataFrame) -> None:
+        """Queue the fetched batch and advance the per-domain quota."""
         if self.config.max_pages_per_domain is not None:
             wave_counts = batch.groupBy("domain").agg(
                 F.count("*").alias("n_fetched")
@@ -565,237 +769,98 @@ class WaveRunner:
                 .groupBy("domain")
                 .agg(F.sum("n_fetched").alias("n_fetched"))
             ).transform(checkpoint_cut)
+        self._queue_flush("fetch_batches", wave, batch.select(
+            "wave", "domain", "url", "rank_in_domain", "rank_in_wave",
+            "fetch_at", "crawl_delay", "domain_bucket",
+        ), group=wave)
 
-        self._queue_flush(
-            "fetch_batches",
-            wave,
-            batch.select(
-                "wave", "domain", "url", "rank_in_domain", "rank_in_wave",
-                "fetch_at", "crawl_delay", "domain_bucket",
-            ),
-            group=wave,
-        )
+    def _dedup(self, wave: int, docs: DataFrame) -> None:
+        """Dedup stage (opt-in): band the fetched pages' text, probe the
+        loop-maintained index, queue the pairs and the index delta."""
+        from kryptone_spark.operators import dedup as _dedup
+        from kryptone_spark.operators.extract import page_text
 
-        # mark the whole batch visited (reference marks page-at-a-time,
-        # base.py:1121; batch pages are all in `seen` already, so links
-        # to them reject on 'seen' either way — reason parity holds
-        # because admission below joins the PRE-wave visited state).
-        visited_w = batch.select("url", "domain_bucket", F.col("wave"))
-        self._queue_flush("visited", wave, visited_w, group=wave)
+        # fetched pages' text (missing doc ⇒ NULL text ⇒ skipped);
+        # doc_id = url — unique across waves (visited anti-join), so
+        # the index never holds two banded copies of one page
+        batch_text = page_text(
+            docs.select(F.col("url").alias("doc_id"), "spans")
+        ).where(F.col("text").isNotNull() & (F.col("text") != ""))
+        # eager: three consumers (probe plan, state union, delta write
+        # on the flush thread) — a lazy checkpoint raced by flush
+        # threads would run the signature pass per consumer
+        banded_new = _dedup.banded_rows(
+            _dedup.minhash_signatures(batch_text)
+        ).transform(checkpoint_cut, eager=True)
+        idx = self._state["dedup_index"]
+        if idx is not None:
+            pairs = _dedup.lsh_pairs_vs_index_df(idx, batch_text, banded_new=banded_new)
+        else:  # first wave with any text: within-batch pairs only
+            pairs = _dedup._pairs_from_banded(banded_new)
+        w = F.lit(wave).alias("wave")
+        self._queue_flush("dup_pairs", wave, pairs.select(
+            "doc_a", "doc_b", "n_shared_bands", w), group=wave)
+        self._state.append("dedup_index", banded_new)
+        self._queue_flush("dedup_index", wave, banded_new.select(
+            "doc_id", "band", "bucket", w), group=wave)
 
-        # fetch = join against the interleaved documents table (S7)
-        docs = fetch_documents_join(
-            batch, self.documents, nparts=nparts, fetched=fetched,
-            parallelism=self.spark.sparkContext.defaultParallelism,
-        )
-        links = (
-            docs.select(F.col("url").alias("src_url"), F.explode_outer("spans").alias("s"))
-            .where(F.col("s.kind") == "link")
-            .select("src_url", F.col("s.media_ref").alias("url"))
-        )
-
-        # trap gate (opt-in, engine-only): like gather_filter, dropped
-        # URLs never reach the seen set — and being pre-admission, they
-        # never cost a bloom probe either. Shuffle-free projection.
-        if self.config.trap_threshold is not None:
-            from kryptone_spark.operators.traps import trap_filter
-
-            links = trap_filter(links, threshold=self.config.trap_threshold)
-
-        if self.dedup:
-            from kryptone_spark.operators import dedup as _dedup
-            from kryptone_spark.operators.extract import page_text
-
-            t_dd = time.perf_counter()
-            # fetched pages' text (missing doc ⇒ NULL text ⇒ skipped);
-            # doc_id = url — unique across waves (visited anti-join), so
-            # the index never holds two banded copies of one page
-            batch_text = page_text(
-                docs.select(F.col("url").alias("doc_id"), "spans")
-            ).where(F.col("text").isNotNull() & (F.col("text") != ""))
-            # eager: three consumers (probe plan, state union, delta
-            # write on the flush thread) — a lazy checkpoint raced by
-            # flush threads would run the signature pass per consumer
-            banded_new = _dedup.banded_rows(
-                _dedup.minhash_signatures(batch_text)
-            ).transform(checkpoint_cut, eager=True)
-            idx = self._state["dedup_index"]
-            if idx is not None:
-                pairs = _dedup.lsh_pairs_vs_index_df(
-                    idx, batch_text,
-                    max_bucket_size=self.dedup_max_bucket,
-                    banded_new=banded_new,
-                )
-            else:  # first wave with any text: within-batch pairs only
-                pairs = _dedup._pairs_from_banded(
-                    banded_new, self.dedup_max_bucket
-                )
-            self._queue_flush(
-                "dup_pairs", wave,
-                pairs.select(
-                    "doc_a", "doc_b", "n_shared_bands",
-                    F.lit(wave).alias("wave"),
-                ),
-                group=wave,
-            )
-            self._append_state("dedup_index", banded_new)
-            self._queue_flush(
-                "dedup_index", wave,
-                banded_new.select(
-                    "doc_id", "band", "bucket", F.lit(wave).alias("wave")
-                ),
-                group=wave,
-            )
-            self.phase_seconds["dedup"] += time.perf_counter() - t_dd
-
-        # home page admissible only from the first-ever processed page
-        # (iteration_count semantics, base.py:706-717); the politeness
-        # window orders by url, so the anchor is the wave's minimum
-        # SUCCESSFUL url — and with fetch failures the first processed
-        # page may land in a later wave (an all-failed wave 0 processes
-        # nothing, oracle pages_processed stays 0).
-        allow_home: bool | str = False
+    def _home_anchor(self, stats, fetched: int) -> bool | str:
+        """The home page is admissible only from the first-ever
+        processed page (iteration_count semantics, base.py:706-717); the
+        politeness window orders by url, so the anchor is the wave's
+        minimum SUCCESSFUL url — and with fetch failures the first
+        processed page may land in a later wave (an all-failed wave 0
+        processes nothing, oracle pages_processed stays 0)."""
+        anchor: bool | str = False
         if not self._any_fetched:
-            allow_home = stats["first_ok_url"] or False
+            anchor = stats["first_ok_url"] or False
         if fetched > 0:
             self._any_fetched = True
+        return anchor
 
+    def _admit(self, links: DataFrame, allow_home: bool | str) -> DataFrame:
         seen = self._state["seen"]
-        seen_urls = seen.select("url") if seen is not None else None
-        if self.use_bloom and seen_urls is not None:
-            from kryptone_spark.operators.seen import (
-                bloom_prefilter,
-                build_bloom_sidecar_table,
-            )
+        if self.use_bloom and self._bloom_sidecar is None and seen is not None:
+            from kryptone_spark.operators.seen import build_bloom_sidecar_table
 
-            if self._bloom_sidecar is None:
-                self._bloom_sidecar = build_bloom_sidecar_table(
-                    seen_urls, self.config
-                ).transform(checkpoint_cut)
-            admitted = bloom_prefilter(
-                links, seen_urls, self.config, visited=visited,
-                allow_home=allow_home, sidecar=self._bloom_sidecar,
-            )
-        else:
-            admitted = admission.admit(
-                links, self.config, seen=seen_urls,
-                visited=visited.select("url") if visited is not None else None,
-                allow_home=allow_home,
-            )
-        # admitted feeds FIVE consumers (seen/frontier/edges/lineage
-        # writes + next-wave state), and flush submits the writes from
-        # concurrent threads: an unmaterialized lazy checkpoint would
-        # let every thread race to compute the admission DAG
-        # independently (measured 2x wave wall time). It is guaranteed
-        # materialized before flush: per_url's eager checkpoint below
-        # (or the stats agg when collect_stats is on) computes it — and
-        # a lazy localCheckpoint persists on first computation — so the
-        # checkpoint itself can stay lazy and the admission DAG runs
-        # exactly once per wave instead of once for the checkpoint and
-        # once for per_url.
-        admitted = admitted.transform(checkpoint_cut)
-        if self.collect_stats:
-            counts = admitted.agg(
-                F.count("*").alias("cand"),
-                F.sum(
-                    ((F.col("verdict") == "valid") & ~F.col("filtered")).cast("long")
-                ).alias("out"),
-            ).collect()[0]
-            candidates, out_count = counts["cand"], int(counts["out"] or 0)
-        else:
-            candidates = out_count = -1
-        t2 = time.perf_counter()
-        self.phase_seconds["admission"] += t2 - t1
+            self._bloom_sidecar = build_bloom_sidecar_table(
+                seen.select("url"), self.config
+            ).transform(checkpoint_cut)
+        # Cut lazily: admitted feeds five consumers, some written by
+        # concurrent flush threads that would each recompute an uncut
+        # admission DAG (measured 2x wave wall time); per_url_rows'
+        # eager checkpoint computes — and so persists — it once.
+        return admit_links(
+            links, self.config, seen=seen, visited=self._state["visited"],
+            allow_home=allow_home,
+            bloom_sidecar=self._bloom_sidecar if self.use_bloom else None,
+        ).transform(checkpoint_cut)
 
-        # per-URL aggregation: any-valid wins (matches the oracle's
-        # sorted per-page processing — home rule is src-dependent, all
-        # other predicates are per-URL deterministic). Eager checkpoint:
-        # the seen and frontier deltas both derive from it and are
-        # written by concurrent flush threads — lazy would run this
-        # shuffle twice. Its row count is observed in the same job.
-        n_per_url = Observation()
-        per_url = admitted.groupBy("url", "domain", "domain_bucket").agg(
-            F.max(F.col("verdict") == "valid").alias("is_valid"),
-            F.max(F.col("filtered")).alias("filtered"),
-        ).observe(n_per_url, F.count(F.lit(1)).alias("n")).transform(
-            checkpoint_cut, eager=True
-        )
-        # Width for THIS wave's state deltas (seen_rows/new_frontier
-        # below): they are link-count-sized, and `nparts` is sized from
-        # the PAGE count — a 10-hub wave emitting 10^5 links would
-        # coalesce its deltas (and the next wave's frontier scan) onto
-        # one task. per_url's cardinality upper-bounds both deltas.
-        delta_nparts = max(1, min(
-            self.spark.sparkContext.defaultParallelism,
-            (n_per_url.get["n"] + 2047) // 2048,
-        ))
-        t3 = time.perf_counter()
-        self.phase_seconds["per_url"] += t3 - t2
-
-        seen_rows = per_url.select(
-            "url", "domain_bucket",
-            F.lit(wave + 1).alias("first_wave"),
-            F.when(F.col("is_valid"), F.lit("valid")).otherwise(F.lit("rejected")).alias("verdict"),
-        )
-        # first_wave means FIRST: a URL re-encountered in a later wave
-        # must not append another seen row — duplicates would multiply
-        # every candidate row through admission's membership left-join
-        # (and grow the seen table by one copy per re-encountering
-        # wave). P12's set-union semantics are an anti-join here.
-        if seen is not None:
-            seen_rows = seen_rows.join(seen.select("url"), "url", "left_anti")
-        # materialize the delta ONCE: the sidecar build below,
-        # _append_state and _queue_flush then reuse the checkpointed RDD
-        # instead of recomputing the anti-join + per-url agg DAG per
-        # consumer. Coalesced first (narrow): the anti-join leaves
-        # shuffle.partitions mostly-empty partitions on a small wave,
-        # and every later wave re-scans this delta inside the seen
-        # union — right-sizing it here is what
-        # keeps deep crawls' per-wave task count flat (with the periodic
-        # fold in _append_state). Big waves keep full width:
-        # delta_nparts is capped at defaultParallelism.
-        seen_rows = seen_rows.coalesce(delta_nparts).transform(checkpoint_cut)
-        if self.use_bloom and self._bloom_sidecar is not None:
-            from kryptone_spark.operators.seen import (
-                build_bloom_sidecar_table,
-                compact_sidecar_table,
-            )
-
-            # O(delta): only the wave's genuinely-new seen rows hash.
-            # Cut as it is merged, so later waves' probes read the built
-            # bits instead of re-running every delta's build.
-            delta = build_bloom_sidecar_table(seen_rows, self.config)
-            self._bloom_sidecar = self._bloom_sidecar.unionByName(
-                delta.transform(checkpoint_cut)
-            )
-            self._bloom_deltas += 1
-            # same-(m,k) OR compaction bounds probe cost on long crawls
-            # (small deltas all sit at the min_bits floor, so they
-            # collapse to one bloom per bucket)
-            if self._bloom_deltas >= self.bloom_compact_every:
-                self._bloom_sidecar = compact_sidecar_table(
-                    self._bloom_sidecar
-                ).transform(checkpoint_cut)
-                self._bloom_deltas = 0
-        new_frontier = per_url.where(F.col("is_valid") & ~F.col("filtered")).select(
-            "url", "domain", "domain_bucket",
-            F.lit(wave + 1).alias("depth"),
-            F.lit(wave + 1).alias("discovered_wave"),
-            F.lit(0.0).alias("priority"),
-        ).coalesce(delta_nparts)  # right-sized like seen_rows (deep-crawl width)
-        self._append_state("seen", seen_rows)
-        self._append_state("frontier", new_frontier)
-        self._append_state("visited", visited_w.select("url", "domain_bucket"))
+    def _append_wave(self, wave: int, batch: DataFrame, admitted: DataFrame,
+                     seen_rows: DataFrame, new_frontier: DataFrame,
+                     n_links: int) -> None:
+        """State stage: fold the wave's deltas into the in-memory state
+        and queue them, lineage last, as the wave's commit group. The
+        whole batch is marked visited (the reference marks
+        page-at-a-time, base.py:1121; batch pages are all in `seen`
+        already, and admission joined the PRE-wave visited state)."""
+        if self._bloom_sidecar is not None:
+            self._merge_bloom(seen_rows)
+        self._state.append("seen", seen_rows)
+        self._state.append("frontier", new_frontier)
+        self._state.append("visited", batch.select("url", "domain_bucket"))
+        self._queue_flush("visited", wave, batch.select(
+            "url", "domain_bucket", "wave"), group=wave)
         self._queue_flush("seen", wave + 1, seen_rows, group=wave)
         self._queue_flush("frontier", wave + 1, new_frontier, group=wave)
-
-        # edges (A3 url_distribution) + lineage (per-bucket audit)
-        if self.write_edges:
-            edges = admitted.select(
-                F.col("src_url"), F.col("url").alias("dst_url"),
-                F.lit(wave).alias("wave"), "domain_bucket",
-            )
-            self._queue_flush("edges", wave, edges, group=wave)
+        # edges (A3 url_distribution), sized to their own row count like
+        # the state deltas: admitted's width is whatever AQE's runtime
+        # join replanning left, and that varies from run to run
+        par = self.spark.sparkContext.defaultParallelism
+        self._queue_flush("edges", wave, admitted.select(
+            "src_url", F.col("url").alias("dst_url"),
+            F.lit(wave).alias("wave"), "domain_bucket",
+        ).coalesce(_width(n_links, par)), group=wave)
         if self.priority == "pagerank":
             e = admitted.select("src_url", F.col("url").alias("dst_url"))
             # lineage cut like every other cumulative state: without it
@@ -804,53 +869,30 @@ class WaveRunner:
             self._edges_acc = (
                 e if self._edges_acc is None else self._edges_acc.unionByName(e)
             ).transform(checkpoint_cut)
-        # Per-filter cardinality rides the same single-shuffle agg as
-        # urls_in/out (conditional sums partial-aggregate map-side); the
-        # reason vocabulary is the closed admission set (admission.py
-        # checks list) + the post-seen ignore_test verdict, kept static
-        # so the lineage schema never varies with CrawlConfig.
-        _fc_keys = (
-            "refresh_seen", "domain", "empty", "fragment", "home",
-            "image", "visited", "seen", "rule", "ignore_test",
-        )
-        _fc_sums = [
-            F.sum(
-                (F.col("filtered") if k == "ignore_test"
-                 else (F.col("reject_reason") == k)).cast("long")
-            ).alias(f"__fc_{k}")
-            for k in _fc_keys
-        ]
-        lineage = (
-            admitted.groupBy("domain_bucket")
-            .agg(
-                F.count("*").alias("urls_in"),
-                F.sum(
-                    ((F.col("verdict") == "valid") & ~F.col("filtered")).cast("long")
-                ).alias("urls_out"),
-                *_fc_sums,
-            )
-            .select(
-                F.lit(wave).alias("wave_id"),
-                F.col("domain_bucket").alias("partition_id"),
-                "urls_in", "urls_out",
-                F.map_from_arrays(
-                    F.array(*[F.lit(k) for k in _fc_keys]),
-                    F.array(*[F.col(f"__fc_{k}") for k in _fc_keys]),
-                ).alias("filter_cardinality"),
-                F.current_timestamp().alias("ts"),
-            )
-        )
-        self._queue_flush("lineage", wave, lineage, group=wave)
-        t4 = time.perf_counter()
-        self.phase_seconds["state_build"] += t4 - t3
+        self._queue_flush("lineage", wave, lineage_rows(admitted, wave), group=wave)
 
-        if (wave + 1) % self.checkpoint_interval == 0:
-            self._flush_async()
-        self.phase_seconds["flush"] += time.perf_counter() - t4
+    def _merge_bloom(self, seen_rows: DataFrame) -> None:
+        from kryptone_spark.operators.seen import (
+            build_bloom_sidecar_table,
+            compact_sidecar_table,
+        )
 
-        dur = float(stats["dur"] or 0.0)
-        self._offset += dur
-        return WaveSummary(wave, fetched, candidates, out_count, dur)
+        # O(delta): only the wave's genuinely-new seen rows hash. Cut as
+        # it is merged, so later waves' probes read the built bits
+        # instead of re-running every delta's build.
+        delta = build_bloom_sidecar_table(seen_rows, self.config)
+        self._bloom_sidecar = self._bloom_sidecar.unionByName(
+            delta.transform(checkpoint_cut)
+        )
+        self._bloom_deltas += 1
+        # same-(m,k) OR compaction bounds probe cost on long crawls
+        # (small deltas all sit at the min_bits floor, so they collapse
+        # to one bloom per bucket)
+        if self._bloom_deltas >= self.bloom_compact_every:
+            self._bloom_sidecar = compact_sidecar_table(
+                self._bloom_sidecar
+            ).transform(checkpoint_cut)
+            self._bloom_deltas = 0
 
     # ---- full crawl -----------------------------------------------------
 
@@ -907,8 +949,7 @@ class WaveRunner:
             return self.run(max_waves=max_waves)
         # read each committed table ONCE (re-reading re-globs hundreds
         # of wave dirs and rebuilds the union plan per consumer)
-        for t in ("seen", "frontier", "visited", "robots_blocked",
-                  "fetch_failed", "dedup_index"):
+        for t in self._state:
             df = self.io.read(t)
             if df is not None:
                 self._state[t] = df.drop("wave").transform(checkpoint_cut)
@@ -917,24 +958,13 @@ class WaveRunner:
         # rebuild the link-evidence priority state from committed edges:
         # a resumed pagerank crawl must rank with the SAME pre-crash
         # evidence or it silently reverts to FIFO until new edges
-        # accumulate (needs write_edges=True — without the durable edge
-        # table the evidence is unrecoverable and ranking restarts cold)
+        # accumulate. The next wave re-ranks from it before scheduling.
         if self.priority == "pagerank":
             ed = self.io.read("edges")
             if ed is not None:
                 self._edges_acc = ed.select(
                     "src_url", "dst_url"
                 ).transform(checkpoint_cut)
-                # ranks as-of the last rank cycle: run_wave computes
-                # them AT aligned wave w from edges of waves < w
-                lrw = ((next_wave - 1) // self.rank_every) * self.rank_every
-                if lrw >= 1:
-                    from kryptone_spark.operators import linkgraph
-
-                    prior = ed.where(F.col("wave") < lrw).select(
-                        "src_url", "dst_url"
-                    )
-                    self._ranks = checkpoint_cut(linkgraph.pagerank(prior))
         # rebuild the per-domain quota counters from committed batches
         if self.config.max_pages_per_domain is not None and fb is not None:
             self._fetched_counts = (
@@ -949,16 +979,9 @@ class WaveRunner:
             and self.fetch_failures is not None
             and ff is not None
         ):
-            self._domain_backoff = (
-                ff.where(F.col("wave") == next_wave - 1)
-                .groupBy("domain")
-                .agg(
-                    F.pow(
-                        F.lit(float(self.config.failure_backoff)),
-                        F.least(F.count("*"), F.lit(6)).cast("double"),
-                    ).alias("backoff_mult")
-                )
-                .transform(checkpoint_cut)
+            self._domain_backoff = domain_backoff(
+                ff.where(F.col("wave") == next_wave - 1),
+                self.config.failure_backoff,
             )
         # rebuild the virtual clock offset from committed batches —
         # failed attempts consumed politeness slots too, so the max

@@ -10,20 +10,23 @@ incrementally. This module is that extension point:
   the fixed schema + watermark on fetch_ts for late arrivals.
 - ``windowed_fetch_stats`` — event-time windowed per-domain counts
   (politeness monitoring).
+- ``run_crawl_ingest`` — foreachBatch crawl-state maintenance: each
+  micro-batch of fetch results runs the batch wave loop's own fetch →
+  admission → per-URL → state-fold stages (plans/waves.py) and commits
+  ``visited_stream``/``seen_stream`` deltas idempotently per batch id.
 - ``run_visited_merge`` — foreachBatch merge of streamed results into
   the visited table (idempotent per batch id).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kryptone_spark.functions import urls as U
 from kryptone_spark.plans.lineage_cut import checkpoint_cut
 from kryptone_spark.plans.tableio import TableIO
-from kryptone_spark.sources.seeds import from_list
 
 FETCH_RESULT = T.StructType(
     [
@@ -162,41 +165,32 @@ def run_crawl_ingest(
     config,
     io: TableIO,
     checkpoint_dir: str,
-    n_buckets: int = 64,
 ):
     """Streaming-driven crawl-state maintenance: external fetchers
     stream back (url, fetch_ts, status) results and each micro-batch is
-    folded through the SAME admission pipeline the batch wave loop uses
-    — visited ∪= successful fetches, links = batch ⋈ documents,
-    seen ∪= admit(links, seen, visited_pre) — committed idempotently
-    per batch id (``seen_stream`` / ``visited_stream`` delta tables).
+    folded through the batch wave loop's own stages (plans/waves.py:
+    fetch_links → admit_links → per_url_rows → state_deltas →
+    FoldedState) — visited ∪= successful fetches, links = batch ⋈
+    documents (trap-gated), seen ∪= admit(links, seen, visited_pre) —
+    committed idempotently per batch id (``seen_stream`` /
+    ``visited_stream`` delta tables; batch b writes wave b+1).
 
     Parity contract (tests/test_sources_sinks_streaming.py): a stream
     delivering the wave loop's own fetch batches in crawl order reaches
-    the SAME final seen (url, verdict) and visited sets as the batch
-    loop / the Python oracle replay — per-URL admission verdicts are
-    order-deterministic, and the home-rule anchor (first SUCCESSFUL
-    fetch = the lexicographically-first ok URL of the first non-empty
-    batch) matches the wave loop's because results arrive in crawl
-    order. Failed fetches (status ≥ 400) consume no visited row and
-    contribute no links, exactly like the wave loop's failure channel;
-    re-delivered results collapse via the same anti-joins that make
-    P12 a set union.
+    the SAME final seen (url, verdict) and visited (url, domain_bucket)
+    sets as the batch loop / the Python oracle replay — per-URL
+    admission verdicts are order-deterministic, and the home-rule
+    anchor (first SUCCESSFUL fetch = the lexicographically-first ok URL
+    of the first non-empty batch) matches the wave loop's because
+    results arrive in crawl order. Failed fetches (status ≥ 400)
+    consume no visited row and contribute no links, exactly like the
+    wave loop's failure channel; re-delivered results collapse via the
+    same anti-joins that make P12 a set union.
     """
-    from kryptone_spark.operators import admission
+    from kryptone_spark.plans import waves
 
-    state: dict = {"seen": None, "visited": None, "any_fetched": False}
-
-    def _seed() -> None:
-        seeds = list(dict.fromkeys(config.start_urls))
-        df = from_list(documents.sparkSession, seeds)
-        admitted = admission.admit(df, config, allow_home=True)
-        rows = admitted.select(
-            "url", "domain_bucket",
-            F.lit(0).alias("first_wave"), F.col("verdict"),
-        ).localCheckpoint(eager=True)
-        state["seen"] = rows
-        io.write_wave("seen_stream", rows, 0)
+    state = waves.FoldedState(("seen", "visited"))
+    any_fetched = False
 
     def _bootstrap(batch_id: int) -> None:
         """Seed on first start; REHYDRATE on restart. A restarted query
@@ -211,8 +205,11 @@ def run_crawl_ingest(
         visited-only wave and a fully written wave whose batch missed
         the commit log; keeping the latter would let the re-delivered
         batch's (now empty) deltas overwrite it."""
+        nonlocal any_fetched
         if not io.committed_waves("seen_stream"):
-            _seed()
+            seen, _ = waves.seed_rows(documents.sparkSession, config)
+            state.append("seen", seen)
+            io.write_wave("seen_stream", seen, 0)
             return
         for t in ("seen_stream", "visited_stream"):
             io.drop_waves_after(t, int(batch_id))
@@ -226,63 +223,41 @@ def run_crawl_ingest(
             # the home-rule anchor fires only on the first SUCCESSFUL
             # fetch; any committed visited row means that already
             # happened in a pre-restart batch
-            state["any_fetched"] = bool(v.limit(1).count())
+            any_fetched = bool(v.limit(1).count())
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal any_fetched
         if state["seen"] is None:
             _bootstrap(batch_id)
+        wave, seen, visited = int(batch_id), state["seen"], state["visited"]
         ok = batch_df.where(F.col("status") < 400).select("url").distinct()
-        visited = state["visited"]
         if visited is not None:  # re-delivery: visited is a set
             ok = ok.join(visited.select("url"), "url", "left_anti")
-        ok = ok.localCheckpoint(eager=True)
+        # the cut's own job observes the batch's width and the home-rule
+        # anchor candidate
+        obs = Observation()
+        ok = checkpoint_cut(
+            ok.observe(obs, F.count(F.lit(1)).alias("n"), F.min("url").alias("first")),
+            eager=True,
+        )
         anchor: bool | str = False
-        if not state["any_fetched"]:
-            first = ok.agg(F.min("url").alias("u")).collect()[0]["u"]
-            if first is not None:
-                anchor, state["any_fetched"] = first, True
-        visited_rows = ok.select(
-            "url", U.domain_bucket(U.host(F.col("url")), n_buckets).alias("domain_bucket")
+        if not any_fetched and obs.get["first"] is not None:
+            anchor, any_fetched = obs.get["first"], True
+        ok, _, links = waves.fetch_links(ok, documents, config, obs.get["n"])
+        admitted = waves.admit_links(
+            links, config, seen=seen, visited=visited, allow_home=anchor
         )
-        links = (
-            ok.join(documents.withColumnRenamed("doc_id", "url"), "url", "left")
-            .select(F.col("url").alias("src_url"), F.explode_outer("spans").alias("s"))
-            .where(F.col("s.kind") == "link")
-            .select("src_url", F.col("s.media_ref").alias("url"))
-        )
-        seen = state["seen"]
-        admitted = admission.admit(
-            links, config, seen=seen.select("url"),
-            visited=visited.select("url") if visited is not None else None,
-            allow_home=anchor,
-        )
-        per_url = admitted.groupBy("url", "domain_bucket").agg(
-            F.max(F.col("verdict") == "valid").alias("is_valid"),
-        )
-        seen_rows = per_url.select(
-            "url", "domain_bucket",
-            F.lit(int(batch_id) + 1).alias("first_wave"),
-            F.when(F.col("is_valid"), F.lit("valid"))
-            .otherwise(F.lit("rejected")).alias("verdict"),
-        ).join(seen.select("url"), "url", "left_anti").localCheckpoint(eager=True)
-        visited_rows = visited_rows.localCheckpoint(eager=True)
-        state["seen"] = seen.unionByName(seen_rows)
-        state["visited"] = (
-            visited_rows if visited is None else visited.unionByName(visited_rows)
-        )
-        # long-running streams accumulate one union segment per batch —
-        # the same O(batches) plan-depth growth the wave loop folds away
-        # (plans/waves.py:_append_state): every 16 batches, collapse
-        # each state union into one right-width checkpointed scan
-        state["appends"] = state.get("appends", 0) + 1
-        if state["appends"] >= 16:
-            state["appends"] = 0
-            par = batch_df.sparkSession.sparkContext.defaultParallelism
-            for k in ("seen", "visited"):
-                if state[k] is not None:
-                    state[k] = checkpoint_cut(state[k].coalesce(max(1, par)))
-        io.write_wave("visited_stream", visited_rows, int(batch_id) + 1)
-        io.write_wave("seen_stream", seen_rows, int(batch_id) + 1)
+        per_url, counts = waves.per_url_rows(admitted)
+        seen_rows, _ = waves.state_deltas(per_url, counts["n"], seen, wave)
+        # the bucket admission gives a resolved URL, as in the batch loop
+        visited_rows = ok.select("url", U.domain_bucket(
+            U.netloc(F.col("url")), config.n_domain_buckets
+        ).alias("domain_bucket"))
+        state.append("seen", seen_rows)
+        state.append("visited", visited_rows)
+        # seen_stream last: its committed wave marks the batch done
+        io.write_wave("visited_stream", visited_rows, wave + 1)
+        io.write_wave("seen_stream", seen_rows, wave + 1)
 
     return (
         stream.writeStream.foreachBatch(_fold)

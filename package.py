@@ -46,7 +46,6 @@ def main() -> None:
     ap.add_argument("--state", required=True, help="state-table root (parquet dir / Iceberg warehouse)")
     ap.add_argument("--max-waves", type=int, default=None)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--checkpoint-interval", type=int, default=1)
     args = ap.parse_args()
 
     from kryptone_spark.session import get_spark
@@ -57,9 +56,7 @@ def main() -> None:
     config = CrawlConfig(start_urls=args.seeds, ignore_images=True)
     docs = spark.read.parquet(args.documents)
     runner = WaveRunner(
-        spark, config, docs, TableIO(spark, args.state),
-        use_bloom=True, collect_stats=False,
-        checkpoint_interval=args.checkpoint_interval,
+        spark, config, docs, TableIO(spark, args.state), use_bloom=True
     )
     result = runner.resume(args.max_waves) if args.resume else runner.run(args.max_waves)
     print(f"fetched={result.total_fetched} waves={len(result.waves)}")

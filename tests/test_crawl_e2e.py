@@ -126,20 +126,26 @@ def test_per_url_phase_runs_only_its_checkpoint_jobs(spark, site, tmp_path, monk
     """The state-delta width comes from per_url's own materializing job
     (an observed row count), so the per_url phase of every wave starts
     exactly the jobs of its eager checkpoint: no count() over the
-    checkpoint afterwards. Jobs are counted on the JVM scheduler's job
-    id counter; the flush runs inline, so no background write lands
-    inside the phase."""
+    checkpoint afterwards. The summary's admission counts are observed
+    in that same job, so with default arguments the admission phase
+    starts no job of its own — only the query stages that AQE runs when
+    the admitted frame's lazy checkpoint is planned — and the counts
+    agree with the committed lineage rows. Jobs are counted on the JVM
+    scheduler's job id counter; the flush runs inline, so no background
+    write lands inside the phase."""
     from concurrent.futures import Future
 
     from kryptone_spark.plans import waves
 
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     eager_cuts = []  # (jobs before, jobs after) per eager checkpoint
+    cut_jobs = set()  # ids of the jobs any checkpoint call started
     cut = waves.checkpoint_cut
 
     def counting_cut(df, eager=False):
         before = dag.nextJobId()
         out = cut(df, eager=eager)
+        cut_jobs.update(range(before, dag.nextJobId()))
         if eager:
             eager_cuts.append((before, dag.nextJobId()))
         return out
@@ -178,6 +184,22 @@ def test_per_url_phase_runs_only_its_checkpoint_jobs(spark, site, tmp_path, monk
     for start, end in phases:
         # the phase's jobs are exactly one eager checkpoint's jobs
         assert end > start and (start, end) in eager_cuts, (start, end, eager_cuts)
+    admission = [
+        (start, end)
+        for (p0, start), (p1, end) in zip(marks, marks[1:])
+        if (p0, p1) == ("schedule", "admission")
+    ]
+    assert len(admission) == 3, marks
+    for start, end in admission:
+        assert set(range(start, end)) <= cut_jobs, (start, end, sorted(cut_jobs))
+    lineage = {
+        r["wave_id"]: (r["i"], r["o"])
+        for r in TableIO(spark, str(tmp_path)).read("lineage")
+        .groupBy("wave_id")
+        .agg(F.sum("urls_in").alias("i"), F.sum("urls_out").alias("o"))
+        .collect()
+    }
+    assert {w.wave: (w.candidates, w.new_frontier) for w in result.waves} == lineage
 
 
 def test_resume_mid_crawl(spark, site, tmp_path):

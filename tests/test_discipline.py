@@ -45,7 +45,6 @@ def test_collect_only_in_declared_places():
         "kryptone_spark/functions/rank.py",       # per-partition counts: O(num_partitions)
         "kryptone_spark/operators/dedup.py",      # CC fixpoint probe: one (count, hash) row
         "kryptone_spark/plans/tableio_iceberg.py", # partitions metadata: O(waves) rows
-        "kryptone_spark/streaming/ingest.py",      # home-anchor min(url): one scalar row
     }
     got = set()
     for f in PKG.rglob("*.py"):

@@ -103,7 +103,7 @@ def _run_chain(spark, depth, tmpdir, fold_every):
     )
     runner = WaveRunner(
         spark, config, _chain_docs(spark, depth), TableIO(spark, str(tmpdir)),
-        collect_stats=False, global_rank=False, fold_state_every=fold_every,
+        global_rank=False, fold_state_every=fold_every,
     )
     runner.seed()
     wave = 0

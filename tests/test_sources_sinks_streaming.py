@@ -857,3 +857,78 @@ def test_streaming_crawl_ingest_folds_state_across_many_batches(spark, tmp_path)
     assert set(got) == state.seen
     for u, v in got.items():
         assert state.seen_verdicts[u] == v, u
+
+
+def _stream_batch_crawl(spark, tmp_path, docs, config):
+    """Crawl ``docs`` with the wave loop, stream its fetch batches back
+    (one file per wave, in crawl order) through run_crawl_ingest, and
+    return both TableIOs ``(batch, stream)``."""
+    import os
+    import time as _time
+
+    from kryptone_spark.plans.tableio import TableIO
+    from kryptone_spark.plans.waves import WaveRunner
+    from kryptone_spark.streaming import ingest
+
+    io_b = TableIO(spark, str(tmp_path / "batch"))
+    WaveRunner(spark, config, docs, io_b).run()
+    by_wave = {}
+    for r in io_b.read("fetch_batches").select("wave", "url", "fetch_at").collect():
+        by_wave.setdefault(r["wave"], []).append(r)
+    results = tmp_path / "results"
+    results.mkdir()
+    t0 = _time.time()
+    for w in sorted(by_wave):
+        p = results / f"w{w:03d}.json"
+        p.write_text("\n".join(
+            json.dumps({
+                "url": r["url"],
+                "fetch_ts": r["fetch_at"].strftime("%Y-%m-%dT%H:%M:%S.000Z"),
+                "status": 200,
+                "n_links": None,
+            })
+            for r in by_wave[w]
+        ))
+        os.utime(p, (t0 + w, t0 + w))
+    io_s = TableIO(spark, str(tmp_path / "streamed"))
+    stream = ingest.fetch_results_stream(spark, str(results), max_files_per_trigger=1)
+    ingest.run_crawl_ingest(
+        stream, docs, config, io_s, str(tmp_path / "ckpt")
+    ).awaitTermination(300)
+    return io_b, io_s
+
+
+def test_streaming_crawl_ingest_applies_trap_gate(spark, tmp_path):
+    """config.trap_threshold gates streamed links exactly as it gates
+    the wave loop's: a trap URL linked from a streamed page never
+    enters seen_stream."""
+    from kryptone_spark.config import CrawlConfig
+    from tests.test_traps_domains import TRAP_SITE_URLS, _trap_site
+
+    config = CrawlConfig(start_urls=["http://sitea.test/"], trap_threshold=2)
+    io_b, io_s = _stream_batch_crawl(spark, tmp_path, _trap_site(spark), config)
+    seen_stream = {r.url for r in io_s.read("seen_stream").collect()}
+    assert "http://sitea.test/p3" in seen_stream  # /p1 was streamed
+    assert not (seen_stream & TRAP_SITE_URLS)
+    assert seen_stream == {r.url for r in io_b.read("seen").collect()}
+
+
+def test_streaming_crawl_ingest_visited_buckets_match_batch_loop(spark, tmp_path):
+    """visited_stream.domain_bucket is the bucket admission assigns
+    (config.n_domain_buckets over the URL's netloc), so the streamed
+    (url, domain_bucket) pairs equal the wave loop's visited pairs."""
+    from kryptone_spark.config import CrawlConfig
+    from kryptone_spark.synth import site_df, synth_site
+
+    site = synth_site(n_domains=2, n_products=10, page_size=4, seed=13)
+    config = CrawlConfig(
+        start_urls=["http://sitea.test/"], ignore_images=True, n_domain_buckets=8
+    )
+    io_b, io_s = _stream_batch_crawl(spark, tmp_path, site_df(spark, site), config)
+
+    def pairs(io, table):
+        return {(r.url, r.domain_bucket) for r in io.read(table).collect()}
+
+    batch = pairs(io_b, "visited")
+    assert len(batch) > 10
+    assert pairs(io_s, "visited_stream") == batch

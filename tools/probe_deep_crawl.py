@@ -70,7 +70,7 @@ def main() -> None:
     try:
         runner = WaveRunner(
             spark, config, docs, TableIO(spark, work),
-            collect_stats=False, global_rank=False,
+            global_rank=False,
         )
         runner.seed()
         walls = []

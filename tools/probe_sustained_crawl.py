@@ -82,7 +82,7 @@ def main() -> None:
     try:
         WaveRunner(
             spark, config, warm_docs, TableIO(spark, warm_dir),
-            collect_stats=False, global_rank=False,
+            global_rank=False,
             use_bloom=BLOOM == "on",
             cluster_documents=cluster,
         ).run()
@@ -95,7 +95,7 @@ def main() -> None:
         io = TableIO(spark, crawl_dir)
         runner = WaveRunner(
             spark, config, docs, io,
-            collect_stats=False, global_rank=False,
+            global_rank=False,
             use_bloom=BLOOM == "on",
             cluster_documents=cluster,
         )

@@ -61,7 +61,7 @@ def main() -> None:
             spark,
             CrawlConfig(start_urls=["http://sitea.test/"], ignore_images=True),
             warm_docs, TableIO(spark, warm_dir),
-            collect_stats=False, global_rank=False,
+            global_rank=False,
         ).run()
     finally:
         shutil.rmtree(warm_dir, ignore_errors=True)
@@ -82,7 +82,7 @@ def main() -> None:
     try:
         io = TableIO(spark, crawl_dir)
         runner = WaveRunner(
-            spark, config, docs, io, collect_stats=False, global_rank=False,
+            spark, config, docs, io, global_rank=False,
         )
         t0 = time.perf_counter()
         runner.run()

@@ -2,7 +2,7 @@
 """Per-wave driver-side profile of the toy bench crawl.
 
 Replicates bench.py:bench_crawl_loop (505-page single-domain site,
-collect_stats=False, global_rank=False) but prints each wave's wall
+global_rank=False) but prints each wave's wall
 and the summed run_wave phase seconds, so the fixed per-wave overhead
 can be attributed (schedule agg / admission / per_url agg / flush /
 other driver time) before optimizing it.
@@ -36,7 +36,7 @@ def main() -> None:
     try:
         WaveRunner(
             spark, config, warm_docs, warm_dir and TableIO(spark, warm_dir),
-            collect_stats=False, global_rank=False,
+            global_rank=False,
         ).run()
     finally:
         shutil.rmtree(warm_dir, ignore_errors=True)
@@ -49,7 +49,7 @@ def main() -> None:
         try:
             io = TableIO(spark, crawl_dir)
             runner = WaveRunner(
-                spark, config, docs, io, collect_stats=False, global_rank=False,
+                spark, config, docs, io, global_rank=False,
             )
             t0 = time.perf_counter()
             runner.seed()

@@ -37,7 +37,7 @@ def main() -> None:
     wdir = tempfile.mkdtemp(prefix="prof_warm_")
     WaveRunner(
         spark, config, warm_docs, TableIO(spark, wdir),
-        collect_stats=False, global_rank=False,
+        global_rank=False,
     ).run()
     shutil.rmtree(wdir, ignore_errors=True)
 
@@ -48,7 +48,7 @@ def main() -> None:
         try:
             io = TableIO(spark, cdir)
             runner = WaveRunner(
-                spark, config, docs, io, collect_stats=False, global_rank=False
+                spark, config, docs, io, global_rank=False
             )
             t = time.time()
             result = runner.run()
