@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 
 def get_spark(cpus: int) -> SparkSession:
+    from kryptone_spark.session import CODEGEN_CONF
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("kryptone-spark-bench")
@@ -35,6 +36,7 @@ def get_spark(cpus: int) -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config(map=CODEGEN_CONF)
         .getOrCreate()
     )
 

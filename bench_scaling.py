@@ -52,6 +52,7 @@ from pyspark.sql import SparkSession, functions as F
 cpus = int(sys.argv[1]); n = int(sys.argv[2]); iters = int(sys.argv[3])
 hot_share = float(sys.argv[4]) if len(sys.argv) > 4 else 0.8
 salt_arg = sys.argv[5] if len(sys.argv) > 5 else "64"
+from kryptone_spark.session import CODEGEN_CONF
 spark = (SparkSession.builder.master(f"local[{cpus}]")
          .appName(f"scaling-{cpus}")
          .config("spark.sql.shuffle.partitions", "64")
@@ -59,6 +60,7 @@ spark = (SparkSession.builder.master(f"local[{cpus}]")
          .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
          .config("spark.local.dir", os.environ.get("SCALING_LOCAL_DIR", "/tmp"))
          .config("spark.ui.enabled", "false")
+         .config(map=CODEGEN_CONF)
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 

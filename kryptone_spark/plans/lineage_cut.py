@@ -57,7 +57,15 @@ _STATS_CAP_DIGITS = 19
 def checkpoint_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """``df.localCheckpoint(eager)`` with inherited plan statistics
     stripped from the checkpoint node once they exceed a sanity cap
-    (see module docstring)."""
+    (see module docstring).
+
+    ``eager=False`` defers only the final stage. Under AQE, planning the
+    checkpoint (``localCheckpoint`` plans ``toRdd``) makes
+    ``AdaptiveSparkPlanExec`` run every shuffle and broadcast query
+    stage of ``df`` right there, on the calling thread: a "lazy" cut of
+    a frame with an exchange or a broadcast starts Spark jobs when it is
+    called, and only the stage after the last exchange runs on first
+    use."""
     cp = df.localCheckpoint(eager=eager)
     try:
         jdf = cp._jdf  # classic-mode only; Connect has no _jdf

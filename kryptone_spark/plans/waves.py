@@ -37,8 +37,8 @@ Scale notes (10^10 frontier):
   candidate↔seen anti-join (bloom-prefiltered via operators/seen.py
   when `use_bloom=True`), and the batch↔documents join.
 - driver holds scalars only (counts, wave offsets) — no collect() of
-  URL lists anywhere — taken from jobs the wave runs anyway: the batch
-  checkpoint's stats agg and the per_url checkpoint's observation.
+  URL lists anywhere — observed in jobs the wave runs anyway: the
+  batch checkpoint's and the per_url checkpoint's.
 """
 
 from __future__ import annotations
@@ -47,14 +47,17 @@ import time
 from collections import defaultdict
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kryptone_spark.config import CrawlConfig
 from kryptone_spark.operators import admission, schedule
 from kryptone_spark.plans.lineage_cut import checkpoint_cut
 from kryptone_spark.plans.tableio import TableIO
+from kryptone_spark.schemas import STATE_TABLES
+from kryptone_spark.session import check_codegen_cache
 from kryptone_spark.sources.seeds import from_list
 
 
@@ -314,6 +317,22 @@ def per_url_rows(admitted: DataFrame) -> tuple[DataFrame, dict[str, int]]:
     return per_url, {k: int(v or 0) for k, v in obs.get.items()}
 
 
+def wave_values(**values) -> Column:
+    """Per-wave scalars (the wave id, a timestamp) as columns whose
+    values travel as DATA, not as generated source: an ``inline`` over
+    a one-element literal array. A primitive literal (``F.lit(wave)``,
+    or ``current_timestamp()``, which the optimizer folds to a micros
+    literal) is inlined into the generated Java, so a plan that differs
+    only in it compiles a fresh class every wave. The array literal is
+    an object, which codegen passes through the class's ``references``
+    array, so the class's source is the same in every wave and compiles
+    once per session. Unlike a broadcast ``literal_frame`` dim (the
+    schedule's form, whose ``BroadcastExchange`` costs one collect job
+    per query) it starts no Spark job. One generator per ``select``;
+    each row gets exactly one copy of the values."""
+    return F.inline(F.array(F.struct(*[F.lit(v).alias(k) for k, v in values.items()])))
+
+
 def state_deltas(
     per_url: DataFrame, n_urls: int, seen: DataFrame | None, wave: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -325,7 +344,7 @@ def state_deltas(
     width = _width(n_urls, per_url.sparkSession.sparkContext.defaultParallelism)
     seen_rows = per_url.select(
         "url", "domain_bucket",
-        F.lit(wave + 1).alias("first_wave"),
+        wave_values(first_wave=wave + 1),
         F.when(F.col("is_valid"), F.lit("valid")).otherwise(F.lit("rejected")).alias("verdict"),
     )
     # first_wave means FIRST: a re-encountered URL appends no seen row
@@ -337,8 +356,7 @@ def state_deltas(
     seen_rows = seen_rows.coalesce(width).transform(checkpoint_cut)
     new_frontier = per_url.where(F.col("is_valid") & ~F.col("filtered")).select(
         "url", "domain", "domain_bucket",
-        F.lit(wave + 1).alias("depth"),
-        F.lit(wave + 1).alias("discovered_wave"),
+        wave_values(depth=wave + 1, discovered_wave=wave + 1),
         F.lit(0.0).alias("priority"),
     ).coalesce(width)
     return seen_rows, new_frontier
@@ -357,7 +375,8 @@ _FC_KEYS = (
 
 def lineage_rows(admitted: DataFrame, wave: int) -> DataFrame:
     """Lineage stage: the per-bucket admission audit of one wave
-    (urls_in/out + per-filter cardinality). Conditional sums
+    (urls_in/out + per-filter cardinality), stamped with the wave and
+    the driver's clock when the stage is built. Conditional sums
     partial-aggregate map-side, so it is one shuffle."""
     fc_sums = [
         F.sum(
@@ -376,14 +395,17 @@ def lineage_rows(admitted: DataFrame, wave: int) -> DataFrame:
             *fc_sums,
         )
         .select(
-            F.lit(wave).alias("wave_id"),
+            wave_values(wave_id=wave, ts=datetime.now(timezone.utc)),
             F.col("domain_bucket").alias("partition_id"),
             "urls_in", "urls_out",
             F.map_from_arrays(
                 F.array(*[F.lit(k) for k in _FC_KEYS]),
                 F.array(*[F.col(f"__fc_{k}") for k in _FC_KEYS]),
             ).alias("filter_cardinality"),
-            F.current_timestamp().alias("ts"),
+        )
+        .select(
+            "wave_id", "partition_id", "urls_in", "urls_out",
+            "filter_cardinality", "ts",
         )
     )
 
@@ -466,6 +488,9 @@ class WaveRunner:
         fold_state_every: int = FOLD_STATE_EVERY,
         cluster_documents: bool = False,
     ):
+        # every wave replans the same shapes: on a session whose codegen
+        # cache cannot hold them, each wave recompiles them (session.py)
+        check_codegen_cache(spark)
         self.spark = spark
         self.config = config
         # cluster_documents: hash-cluster the documents table on doc_id
@@ -693,9 +718,9 @@ class WaveRunner:
 
     def _schedule(self, wave: int):
         """Schedule stage: pending → politeness window → attempt marks →
-        cut, then ONE job that materializes the cut AND collects the
-        driver's scalars (count, virtual duration, first successful URL
-        = home-rule anchor). Returns ``(batch, stats)``."""
+        eager cut, whose own job also observes the driver's scalars
+        (count, virtual duration, first successful URL = home-rule
+        anchor). Returns ``(batch, stats)``."""
         fail_counts = self._failure_counts()
         pending = pending_frontier(self._state, fail_counts, self.config.max_retries)
         if self.priority == "pagerank":
@@ -716,16 +741,18 @@ class WaveRunner:
         )
         if self.fetch_failures is not None:
             batch = mark_attempts(batch, self.fetch_failures, fail_counts)
-        batch = batch.transform(checkpoint_cut)
         ok = ~F.col("__failed") if self.fetch_failures is not None else F.lit(True)
-        stats = batch.agg(
-            F.count("*").alias("n"),
+        obs = Observation()
+        batch = batch.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
             F.sum(ok.cast("long")).alias("n_ok"),
             F.max(F.col("rank_in_domain") * F.col("crawl_delay")).alias("dur"),
             # min over SUCCESSFUL rows: a failed fetch processes no
             # links, so it can never be the home-rule anchor page
             F.min(F.when(ok, F.col("url"))).alias("first_ok_url"),
-        ).collect()[0]
+        ).transform(checkpoint_cut, eager=True)
+        stats = obs.get
         if self.robots is not None or self.config.max_pages_per_domain is not None:
             self._state.append("robots_blocked", new_blocked)
             self._queue_flush("robots_blocked", wave, new_blocked, group=wave)
@@ -797,12 +824,12 @@ class WaveRunner:
             pairs = _dedup.lsh_pairs_vs_index_df(idx, batch_text, banded_new=banded_new)
         else:  # first wave with any text: within-batch pairs only
             pairs = _dedup._pairs_from_banded(banded_new)
-        w = F.lit(wave).alias("wave")
+        # the wave is the partition dir (write_wave), not a data column
         self._queue_flush("dup_pairs", wave, pairs.select(
-            "doc_a", "doc_b", "n_shared_bands", w), group=wave)
+            "doc_a", "doc_b", "n_shared_bands"), group=wave)
         self._state.append("dedup_index", banded_new)
         self._queue_flush("dedup_index", wave, banded_new.select(
-            "doc_id", "band", "bucket", w), group=wave)
+            "doc_id", "band", "bucket"), group=wave)
 
     def _home_anchor(self, stats, fetched: int) -> bool | str:
         """The home page is admissible only from the first-ever
@@ -826,10 +853,13 @@ class WaveRunner:
             self._bloom_sidecar = build_bloom_sidecar_table(
                 seen.select("url"), self.config
             ).transform(checkpoint_cut)
-        # Cut lazily: admitted feeds five consumers, some written by
+        # Cut, because admitted feeds five consumers, some written by
         # concurrent flush threads that would each recompute an uncut
-        # admission DAG (measured 2x wave wall time); per_url_rows'
-        # eager checkpoint computes — and so persists — it once.
+        # admission DAG (measured 2x wave wall time). The cut is lazy
+        # only in its last stage: under AQE, planning it runs the
+        # membership joins' shuffle and broadcast stages here
+        # (lineage_cut.checkpoint_cut); per_url_rows' eager checkpoint
+        # then runs the final stage once and persists it.
         return admit_links(
             links, self.config, seen=seen, visited=self._state["visited"],
             allow_home=allow_home,
@@ -858,8 +888,7 @@ class WaveRunner:
         # join replanning left, and that varies from run to run
         par = self.spark.sparkContext.defaultParallelism
         self._queue_flush("edges", wave, admitted.select(
-            "src_url", F.col("url").alias("dst_url"),
-            F.lit(wave).alias("wave"), "domain_bucket",
+            "src_url", F.col("url").alias("dst_url"), "domain_bucket",
         ).coalesce(_width(n_links, par)), group=wave)
         if self.priority == "pagerank":
             e = admitted.select("src_url", F.col("url").alias("dst_url"))
@@ -948,19 +977,23 @@ class WaveRunner:
         if next_wave == 0:
             return self.run(max_waves=max_waves)
         # read each committed table ONCE (re-reading re-globs hundreds
-        # of wave dirs and rebuilds the union plan per consumer)
+        # of wave dirs and rebuilds the union plan per consumer), with
+        # its stored schema: inferring it runs a footer-reading Spark
+        # job per table
+        def read(t: str) -> DataFrame | None:
+            return self.io.read(t, schema=STATE_TABLES[t])
+
+        tables = {t: read(t) for t in (*self._state, "fetch_batches")}
         for t in self._state:
-            df = self.io.read(t)
-            if df is not None:
-                self._state[t] = df.drop("wave").transform(checkpoint_cut)
-        fb = self.io.read("fetch_batches")
-        ff = self.io.read("fetch_failed")
+            if tables[t] is not None:
+                self._state[t] = tables[t].drop("wave").transform(checkpoint_cut)
+        fb, ff = tables["fetch_batches"], tables["fetch_failed"]
         # rebuild the link-evidence priority state from committed edges:
         # a resumed pagerank crawl must rank with the SAME pre-crash
         # evidence or it silently reverts to FIFO until new edges
         # accumulate. The next wave re-ranks from it before scheduling.
         if self.priority == "pagerank":
-            ed = self.io.read("edges")
+            ed = read("edges")
             if ed is not None:
                 self._edges_acc = ed.select(
                     "src_url", "dst_url"

@@ -26,65 +26,6 @@ DOCUMENTS = T.StructType(
     ]
 )
 
-FRONTIER = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("domain", T.StringType(), True),
-        T.StructField("domain_bucket", T.IntegerType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("discovered_wave", T.IntegerType(), False),
-        T.StructField("priority", T.DoubleType(), False),
-    ]
-)
-
-SEEN = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("domain_bucket", T.IntegerType(), False),
-        T.StructField("first_wave", T.IntegerType(), False),
-        T.StructField("verdict", T.StringType(), False),  # valid|rejected
-    ]
-)
-
-VISITED = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("domain_bucket", T.IntegerType(), False),
-        T.StructField("wave", T.IntegerType(), False),
-    ]
-)
-
-FETCH_BATCHES = T.StructType(
-    [
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("domain", T.StringType(), True),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("rank_in_domain", T.IntegerType(), False),
-        T.StructField("fetch_at", T.TimestampType(), False),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("src_url", T.StringType(), False),
-        T.StructField("dst_url", T.StringType(), False),
-        T.StructField("wave", T.IntegerType(), False),
-    ]
-)
-
-LINEAGE = T.StructType(
-    [
-        T.StructField("wave_id", T.IntegerType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("urls_in", T.LongType(), False),
-        T.StructField("urls_out", T.LongType(), False),
-        T.StructField(
-            "filter_cardinality", T.MapType(T.StringType(), T.LongType()), True
-        ),
-        T.StructField("ts", T.TimestampType(), False),
-    ]
-)
-
 ROBOTS = T.StructType(
     [
         T.StructField("domain", T.StringType(), False),
@@ -99,3 +40,63 @@ SEEDS = T.StructType(
         T.StructField("domain", T.StringType(), True),
     ]
 )
+
+
+# ---- the wave loop's per-wave delta tables, as stored -------------------
+#
+# Data columns in file order, then the partition columns TableIO adds:
+# ``wave`` (the wave directory; a data column inside a compacted
+# generation) and ``domain_bucket`` (the sub-directory). This is the
+# schema ``TableIO.read`` infers for these tables; passing it instead
+# skips parquet footer inference, which is a Spark job per read.
+
+_WAVE = T.StructField("wave", T.IntegerType(), True)
+_BUCKET = T.StructField("domain_bucket", T.IntegerType(), True)
+
+
+def _stored(*fields: tuple[str, T.DataType], bucketed: bool = True) -> T.StructType:
+    cols = [T.StructField(n, t, True) for n, t in fields]
+    return T.StructType(cols + [_WAVE] + ([_BUCKET] if bucketed else []))
+
+
+_S, _I, _L, _D = T.StringType(), T.IntegerType(), T.LongType(), T.DoubleType()
+_TS = T.TimestampType()
+_SEEN_COLS = (("url", _S), ("first_wave", _I), ("verdict", _S))
+_VISITED_COLS = (("url", _S),)
+
+STATE_TABLES: dict[str, T.StructType] = {
+    "fetch_batches": _stored(
+        ("domain", _S), ("url", _S), ("rank_in_domain", _I),
+        ("rank_in_wave", _I), ("fetch_at", _TS), ("crawl_delay", _D),
+    ),
+    "visited": _stored(*_VISITED_COLS),
+    "seen": _stored(*_SEEN_COLS),
+    "frontier": _stored(
+        ("url", _S), ("domain", _S), ("depth", _I),
+        ("discovered_wave", _I), ("priority", _D),
+    ),
+    "edges": _stored(("src_url", _S), ("dst_url", _S)),
+    # pending rows the schedule blocked (robots or exhausted quota)
+    "robots_blocked": _stored(
+        ("domain", _S), ("url", _S), ("depth", _I),
+        ("discovered_wave", _I), ("priority", _D),
+    ),
+    "fetch_failed": _stored(
+        ("url", _S), ("domain", _S), ("attempt", _I),
+        ("fetch_at", _TS), ("crawl_delay", _D),
+    ),
+    "dedup_index": _stored(
+        ("doc_id", _S), ("band", _I), ("bucket", _S), bucketed=False
+    ),
+    "dup_pairs": _stored(
+        ("doc_a", _S), ("doc_b", _S), ("n_shared_bands", _L), bucketed=False
+    ),
+    "lineage": _stored(
+        ("wave_id", _I), ("partition_id", _I), ("urls_in", _L),
+        ("urls_out", _L), ("filter_cardinality", T.MapType(_S, _L)),
+        ("ts", _TS), bucketed=False,
+    ),
+    # streaming ingest (streaming/ingest.py): batch b writes wave b+1
+    "seen_stream": _stored(*_SEEN_COLS),
+    "visited_stream": _stored(*_VISITED_COLS),
+}

@@ -7,11 +7,57 @@ a real cluster via ``spark-submit --py-files`` (see bench/README).
 from __future__ import annotations
 
 import os
+import warnings
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, _parse_datatype_string
+
+
+# Codegen settings every session that runs the engine carries.
+#
+# - ``spark.sql.codegen.cache.maxEntries``: Spark's generated-class
+#   cache holds 100 classes by default. One layered crawl plus one
+#   streaming drain touches about 190 distinct classes (measured with
+#   ``CodegenMetrics.METRIC_COMPILATION_TIME`` on a ``local[4]``
+#   session), so at 100 the cache evicts classes the same operation
+#   needs again, and every crawl recompiles them: 188-208 Janino
+#   compiles, 2.3-2.7 s, per crawl-and-drain. 1024 holds that working
+#   set about five times over. STATIC: ``CodeGenerator`` reads it once
+#   per JVM, when it first generates code, so it must be set when the
+#   session is built, before the first query.
+# - ``spark.sql.codegen.useIdInClassName=false``: with the whole-stage
+#   codegen id in the class name (``GeneratedIteratorForCodegenStage3``)
+#   identical stage code compiles once per stage NUMBER, and a stage's
+#   number shifts whenever an unrelated operator above or below it
+#   changes.
+CODEGEN_CONF = {
+    "spark.sql.codegen.cache.maxEntries": "1024",
+    "spark.sql.codegen.useIdInClassName": "false",
+}
+
+_cache_warned = False
+
+
+def check_codegen_cache(spark: SparkSession) -> None:
+    """Warn once per process when ``spark`` was built with a smaller
+    generated-class cache than ``CODEGEN_CONF`` sizes: every crawl on
+    it then recompiles plan shapes the previous crawl compiled."""
+    global _cache_warned
+    key = "spark.sql.codegen.cache.maxEntries"
+    have = int(spark.conf.get(key, "100"))
+    if _cache_warned or have >= int(CODEGEN_CONF[key]):
+        return
+    _cache_warned = True
+    warnings.warn(
+        f"{key}={have} is below the {CODEGEN_CONF[key]} classes a crawl's "
+        "plans need: evicted classes recompile on every crawl and wave. "
+        "Build the session with kryptone_spark.session.CODEGEN_CONF "
+        "(it is static: set it before the first query).",
+        RuntimeWarning,
+        stacklevel=3,
+    )
 
 
 def get_spark(
@@ -42,6 +88,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config(map=CODEGEN_CONF)
         .getOrCreate()
     )
 

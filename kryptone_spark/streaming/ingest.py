@@ -20,13 +20,16 @@ incrementally. This module is that extension point:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kryptone_spark.config import CrawlConfig
 from kryptone_spark.functions import urls as U
 from kryptone_spark.plans.lineage_cut import checkpoint_cut
 from kryptone_spark.plans.tableio import TableIO
+from kryptone_spark.schemas import STATE_TABLES
+from kryptone_spark.session import check_codegen_cache
 
 FETCH_RESULT = T.StructType(
     [
@@ -159,6 +162,13 @@ def dedup_results_stream(stream: DataFrame, key: str = "url") -> DataFrame:
     return stream.dropDuplicatesWithinWatermark([key])
 
 
+def _visited_bucket(config: CrawlConfig) -> Column:
+    """The bucket admission gives a resolved URL, as in the batch loop."""
+    return U.domain_bucket(
+        U.netloc(F.col("url")), config.n_domain_buckets
+    ).alias("domain_bucket")
+
+
 def run_crawl_ingest(
     stream: DataFrame,
     documents: DataFrame,
@@ -189,6 +199,7 @@ def run_crawl_ingest(
     """
     from kryptone_spark.plans import waves
 
+    check_codegen_cache(documents.sparkSession)
     state = waves.FoldedState(("seen", "visited"))
     any_fetched = False
 
@@ -214,9 +225,10 @@ def run_crawl_ingest(
         for t in ("seen_stream", "visited_stream"):
             io.drop_waves_after(t, int(batch_id))
         state["seen"] = (
-            io.read("seen_stream").drop("wave").localCheckpoint(eager=True)
+            io.read("seen_stream", schema=STATE_TABLES["seen_stream"])
+            .drop("wave").localCheckpoint(eager=True)
         )
-        vt = io.read("visited_stream")
+        vt = io.read("visited_stream", schema=STATE_TABLES["visited_stream"])
         if vt is not None:
             v = vt.drop("wave").localCheckpoint(eager=True)
             state["visited"] = v
@@ -249,10 +261,7 @@ def run_crawl_ingest(
         )
         per_url, counts = waves.per_url_rows(admitted)
         seen_rows, _ = waves.state_deltas(per_url, counts["n"], seen, wave)
-        # the bucket admission gives a resolved URL, as in the batch loop
-        visited_rows = ok.select("url", U.domain_bucket(
-            U.netloc(F.col("url")), config.n_domain_buckets
-        ).alias("domain_bucket"))
+        visited_rows = ok.select("url", _visited_bucket(config))
         state.append("seen", seen_rows)
         state.append("visited", visited_rows)
         # seen_stream last: its committed wave marks the batch done
@@ -268,17 +277,21 @@ def run_crawl_ingest(
 
 
 def run_visited_merge(
-    stream: DataFrame, io: TableIO, checkpoint_dir: str, n_buckets: int = 64
+    stream: DataFrame,
+    io: TableIO,
+    checkpoint_dir: str,
+    config: CrawlConfig | None = None,
 ):
     """foreachBatch merge into the visited table: each micro-batch is an
     idempotent wave-style commit keyed by the batch id (exactly-once on
-    top of at-least-once delivery)."""
+    top of at-least-once delivery). Rows are bucketed as admission
+    buckets them (``domain_bucket(netloc(url), config.n_domain_buckets)``;
+    ``config`` defaults to ``CrawlConfig()``), so they join the wave
+    loop's state on equal buckets."""
+    config = config or CrawlConfig()
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.select(
-            "url",
-            U.domain_bucket(U.host(F.col("url")), n_buckets).alias("domain_bucket"),
-        )
+        rows = batch_df.select("url", _visited_bucket(config))
         # batch ids are monotonically increasing → reuse the per-wave
         # idempotent commit (re-delivered batches overwrite themselves)
         io.write_wave("visited_stream", rows, int(batch_id))

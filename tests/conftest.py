@@ -1,6 +1,8 @@
 import pytest
 from pyspark.sql import SparkSession
 
+from kryptone_spark.session import CODEGEN_CONF
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -13,6 +15,9 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
+        # the engine's codegen settings; the cache size is static, so
+        # it is set here, before the session's first query
+        .config(map=CODEGEN_CONF)
         .getOrCreate()
     )
     yield s

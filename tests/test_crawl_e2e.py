@@ -202,6 +202,99 @@ def test_per_url_phase_runs_only_its_checkpoint_jobs(spark, site, tmp_path, monk
     assert {w.wave: (w.candidates, w.new_frontier) for w in result.waves} == lineage
 
 
+def test_schedule_phase_runs_only_its_checkpoint_jobs(spark, site, tmp_path, monkeypatch):
+    """The batch's driver scalars (row count, successful count, virtual
+    duration, home-rule anchor) are observed in the job of the batch's
+    own eager checkpoint, so the schedule phase of every wave starts
+    only the jobs of its checkpoint calls — no stats collect after the
+    cut. ``global_rank=False``: the global rank's offset collect is a
+    job of its own (functions/rank.py). The flush runs inline, so no
+    background write lands inside the phase."""
+    from concurrent.futures import Future
+
+    from kryptone_spark.plans import waves
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    cut_jobs = set()
+    cut = waves.checkpoint_cut
+
+    def counting_cut(df, eager=False):
+        before = dag.nextJobId()
+        out = cut(df, eager=eager)
+        cut_jobs.update(range(before, dag.nextJobId()))
+        return out
+
+    class Inline:
+        def submit(self, fn, *args):
+            f = Future()
+            f.set_result(fn(*args))
+            return f
+
+    marks = []
+
+    class JobMarks(dict):
+        def __missing__(self, key):
+            return 0.0
+
+        def __setitem__(self, key, value):
+            marks.append((key, dag.nextJobId()))
+            super().__setitem__(key, value)
+
+    monkeypatch.setattr(waves, "checkpoint_cut", counting_cut)
+    config = CrawlConfig(start_urls=["http://sitea.test/"], ignore_images=True)
+    runner = WaveRunner(
+        spark, config, site_df(spark, site), TableIO(spark, str(tmp_path)),
+        global_rank=False,
+    )
+    runner._flush_executor = Inline()
+    runner.phase_seconds = JobMarks()
+    result = runner.run(max_waves=3)
+    assert len(result.waves) == 3
+    phases = [
+        (start, end)
+        for (p0, start), (p1, end) in zip(marks, marks[1:])
+        if (p0, p1) == ("flush", "schedule")
+    ]
+    assert len(phases) == 2, marks
+    for start, end in phases:
+        assert end > start and set(range(start, end)) <= cut_jobs, (
+            start, end, sorted(cut_jobs)
+        )
+
+
+def test_resume_reads_start_no_spark_job(spark, site, tmp_path):
+    """resume() reads every committed table with its stored schema
+    (schemas.STATE_TABLES), so no read runs a parquet footer-inference
+    job, and each table is read once; the resumed crawl still equals
+    an uninterrupted one."""
+    config = CrawlConfig(start_urls=["http://sitea.test/"], ignore_images=True)
+    io_full, _ = run_engine(spark, site, config, tmp_path / "full")
+    io = TableIO(spark, str(tmp_path / "partial"))
+    WaveRunner(spark, config, site_df(spark, site), io).run(max_waves=2)
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    reads = []  # (table, jobs the read started)
+    real_read = io.read
+
+    def counting_read(name, schema=None):
+        before = dag.nextJobId()
+        out = real_read(name, schema=schema)
+        reads.append((name, dag.nextJobId() - before))
+        return out
+
+    io.read = counting_read
+    WaveRunner(spark, config, site_df(spark, site), io).resume()
+    tables = [t for t, _ in reads]
+    assert "seen" in tables and "fetch_batches" in tables, reads
+    assert len(tables) == len(set(tables)), reads
+    assert all(n == 0 for _, n in reads), reads
+    del io.read
+    for t in ("seen", "visited"):
+        want = sorted(tuple(r) for r in io_full.read(t).drop("wave").collect())
+        got = sorted(tuple(r) for r in io.read(t).drop("wave").collect())
+        assert got == want, t
+
+
 def test_resume_mid_crawl(spark, site, tmp_path):
     """Kill after wave 1, resume → identical final state to a full run."""
     config = CrawlConfig(start_urls=["http://sitea.test/"], ignore_images=True)

@@ -932,3 +932,39 @@ def test_streaming_crawl_ingest_visited_buckets_match_batch_loop(spark, tmp_path
     batch = pairs(io_b, "visited")
     assert len(batch) > 10
     assert pairs(io_s, "visited_stream") == batch
+
+
+def test_visited_merge_buckets_match_admission(spark, tmp_path):
+    """run_visited_merge buckets each URL as admission does
+    (config.n_domain_buckets over the netloc, case and port kept), so
+    the merged (url, domain_bucket) pairs equal admission's for URLs
+    whose host is uppercase or carries a port."""
+    from kryptone_spark.config import CrawlConfig
+    from kryptone_spark.operators import admission
+    from kryptone_spark.plans.tableio import TableIO
+    from kryptone_spark.sources.seeds import from_list
+    from kryptone_spark.streaming import ingest
+
+    urls = [
+        "http://A.test:8080/x", "http://a.test/x", "http://B.TEST/y",
+        "https://c.test:8443/z?q=1", "http://Sitea.test/p",
+    ]
+    config = CrawlConfig(start_urls=["http://a.test/"], n_domain_buckets=8)
+    results = tmp_path / "results"
+    results.mkdir()
+    (results / "r1.json").write_text("\n".join(
+        json.dumps({"url": u, "fetch_ts": "2024-01-01T00:00:05.000Z",
+                    "status": 200, "n_links": 0})
+        for u in urls
+    ))
+    io = TableIO(spark, str(tmp_path / "state"))
+    stream = ingest.fetch_results_stream(spark, str(results))
+    ingest.run_visited_merge(
+        stream, io, str(tmp_path / "ckpt"), config
+    ).awaitTermination(120)
+    merged = {(r.url, r.domain_bucket) for r in io.read("visited_stream").collect()}
+    admitted = admission.admit(from_list(spark, urls), config, allow_home=True)
+    want = {(r.url, r.domain_bucket) for r in admitted.collect()}
+    assert {u for u, _ in want} == set(urls)
+    assert len({b for _, b in want}) > 1
+    assert merged == want

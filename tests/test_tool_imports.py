@@ -160,3 +160,59 @@ def test_kwarg_checker_catches_a_removed_knob(tmp_path):
         "2: WaveRunner(no_such_knob=)",
         "4: run_crawl_ingest(no_such_option=)",
     ]
+
+
+SESSION_SCRIPTS = SCRIPTS + [ROOT / "tests" / "conftest.py"]
+
+
+def _sessions_without_recipe(source: str) -> list[str]:
+    """Line of every ``SparkSession.builder ... .getOrCreate()`` chain
+    that does not apply ``config(map=CODEGEN_CONF)``: the codegen cache
+    size is static, so it must ride the builder itself (a session from
+    ``kryptone_spark.session.get_spark`` carries it already)."""
+    bad = []
+    for node in ast.walk(ast.parse(source)):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "getOrCreate"
+        ):
+            continue
+        applied, cur = False, node.func.value
+        while isinstance(cur, (ast.Call, ast.Attribute)):
+            if isinstance(cur, ast.Call):
+                f = cur.func
+                if getattr(f, "attr", None) == "config" and any(
+                    k.arg == "map"
+                    and isinstance(k.value, ast.Name)
+                    and k.value.id == "CODEGEN_CONF"
+                    for k in cur.keywords
+                ):
+                    applied = True
+                cur = f
+            cur = cur.value if isinstance(cur, ast.Attribute) else cur
+        if not applied:
+            bad.append(f"{node.lineno}: session built without CODEGEN_CONF")
+    return bad
+
+
+@pytest.mark.parametrize("path", SESSION_SCRIPTS, ids=lambda p: p.name)
+def test_script_sessions_apply_codegen_recipe(path):
+    bad = [s for src in _sources(path) for s in _sessions_without_recipe(src)]
+    assert not bad, bad
+
+
+def test_recipe_checker_catches_a_bare_builder(tmp_path):
+    bad = tmp_path / "bad.py"
+    bad.write_text(
+        'WORKER = """\n'
+        "s = SparkSession.builder.master('local[2]').getOrCreate()\n"
+        '"""\n'
+        "t = (SparkSession.builder.config('a', 'b')\n"
+        "     .config(map=CODEGEN_CONF).getOrCreate())\n"
+        "u = SparkSession.builder.config(map={}).getOrCreate()\n"
+    )
+    assert sorted(s for src in _sources(bad) for s in _sessions_without_recipe(src)) == [
+        "2: session built without CODEGEN_CONF",
+        "6: session built without CODEGEN_CONF",
+    ]

@@ -44,6 +44,7 @@ def steady(run, iters=3):
 
 
 def main():
+    from kryptone_spark.session import CODEGEN_CONF
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("bloom-paths")
@@ -51,6 +52,7 @@ def main():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config(map=CODEGEN_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -41,10 +41,12 @@ from pyspark.sql import SparkSession
 
 n, iters = int(sys.argv[1]), int(sys.argv[2])
 # master/memory/cores come from spark-submit; only job-shape configs here
+from kryptone_spark.session import CODEGEN_CONF
 spark = (SparkSession.builder.appName("kryptone-submit-scaling")
          .config("spark.sql.shuffle.partitions", "64")
          .config("spark.sql.adaptive.enabled", "false")
          .config("spark.ui.enabled", "false")
+         .config(map=CODEGEN_CONF)
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 

@@ -73,6 +73,7 @@ def main() -> None:
 
     local_dir = os.environ.get("CAP_LOCAL_DIR", "/tmp/spark-capacity")
     os.makedirs(local_dir, exist_ok=True)
+    from kryptone_spark.session import CODEGEN_CONF
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("capacity-wave")
@@ -82,6 +83,7 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.local.dir", local_dir)
         .config("spark.ui.enabled", "false")
+        .config(map=CODEGEN_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -47,6 +47,7 @@ def main() -> None:
 
     local_dir = os.environ.get("CAP_LOCAL_DIR", "/tmp/spark-sustained")
     os.makedirs(local_dir, exist_ok=True)
+    from kryptone_spark.session import CODEGEN_CONF
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("sustained-crawl")
@@ -57,6 +58,7 @@ def main() -> None:
         .config("spark.local.dir", local_dir)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
+        .config(map=CODEGEN_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -23,6 +23,7 @@ from pyspark.sql import SparkSession
 from kryptone_spark.config import CrawlConfig
 from kryptone_spark.plans.tableio import TableIO
 from kryptone_spark.plans.waves import WaveRunner
+from kryptone_spark.session import CODEGEN_CONF
 from kryptone_spark.synth import site_df, synth_site
 
 
@@ -38,6 +39,7 @@ def get_spark(cpus: int) -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "true")
+        .config(map=CODEGEN_CONF)
         .getOrCreate()
     )
 

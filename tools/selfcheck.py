@@ -110,6 +110,8 @@ def main():
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
 
+    from kryptone_spark.session import CODEGEN_CONF
+
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("selfcheck")
@@ -118,6 +120,7 @@ def main():
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.execution.arrow.pyspark.enabled", "false")
+        .config(map=CODEGEN_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

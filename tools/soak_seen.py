@@ -81,6 +81,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from kryptone_spark.session import CODEGEN_CONF
     spark = (
         SparkSession.builder.master("local[32]")
         .appName("seen-soak")
@@ -91,6 +92,7 @@ def main() -> None:
         .config("spark.sql.warehouse.dir", f"{WORK}/warehouse")
         .config("spark.local.dir", "/dev/shm/spark-soak")
         .config("spark.ui.enabled", "false")
+        .config(map=CODEGEN_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
