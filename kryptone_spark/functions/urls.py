@@ -124,18 +124,29 @@ def has_path(url: Column) -> Column:
     return path(url) != F.lit("")
 
 
+# A '%' that does not open a two-ASCII-hex-digit escape. urllib keeps
+# such a '%' as a literal character and decodes every valid escape
+# around it; Java's URLDecoder rejects the whole string instead (and
+# its Integer.parseInt would accept '%+1' and non-ASCII digits like
+# '%٣٣'). Escaping each bad '%' as '%25' first makes the decode total
+# and makes it decode exactly the escapes urllib decodes: '%25' comes
+# back as the '%' it replaced, and every remaining '%' is followed by
+# [0-9a-fA-F]{2}, the only escapes urllib's _hextobyte table knows.
+_BAD_ESCAPE = r"%(?![0-9a-fA-F]{2})"
+
+
 def url_decode_form(url: Column) -> Column:
-    """``unquote_plus`` equivalent: %XX decode AND '+' → space.
-    Malformed escapes leave the input unchanged (urllib behaviour),
-    hence the try/coalesce."""
-    return F.coalesce(F.try_url_decode(url), url)
+    """``unquote_plus`` equivalent: %XX decode AND '+' → space. A
+    malformed escape stays literal and the rest still decodes
+    (``_BAD_ESCAPE``), as in urllib."""
+    return F.url_decode(F.regexp_replace(url, _BAD_ESCAPE, "%25"))
 
 
 def url_unquote(url: Column) -> Column:
     """``urllib.parse.unquote`` equivalent: %XX decode, '+' preserved.
-    Protect literal '+' before form-decoding, restore after."""
-    protected = F.regexp_replace(url, r"\+", "%2B")
-    return F.coalesce(F.try_url_decode(protected), url)
+    Protect literal '+' before form-decoding. ``url`` is used once, so
+    a caller's expression is not copied."""
+    return url_decode_form(F.regexp_replace(url, r"\+", "%2B"))
 
 
 def pathlib_suffix(p: Column) -> Column:
@@ -190,7 +201,7 @@ def origin_of(url: Column) -> Column:
 
 
 def remove_dot_segments(p: Column) -> Column:
-    """Dot-segment normalization for absolute paths ('/…') — the
+    r"""Dot-segment normalization for absolute paths ('/…') — the
     normalization ``urljoin`` applies when the reference resolves
     relative links (base.py:611-616). Mirrors CPython's urljoin
     segment loop EXACTLY, which differs from pure RFC 3986: '..' pops
@@ -200,19 +211,28 @@ def remove_dot_segments(p: Column) -> Column:
     '.'/'..' keeps the directory slash; an emptied stack re-joins to
     '/'. '%2E' stays opaque (normalization runs before any
     percent-decoding, as urljoin does).
+
+    ``p`` and every intermediate appear once in the expression tree
+    (Catalyst has no let-binding: a Column used k times is copied k
+    times). The trailing '.'/'..' case is therefore decided before the
+    fold, not after it: CPython appends an empty segment after a final
+    '.'/'..', and appending a '/' to the string first makes the split
+    yield exactly that empty segment, which the fold keeps. The anchor
+    is ``\z``, not ``$``: Java's ``$`` also matches before a final
+    line terminator (U+0085, U+2028, U+2029), and to CPython '..'
+    followed by one of them is an ordinary segment.
     """
-    # Implemented as a direct transcription of CPython's segment loop
-    # into an array-aggregate stack fold. The higher-order function
-    # splits the admission projection's WholeStageCodegen span in two
-    # (documented trade in test_plans) — measured this is FASTER than
-    # every regex-chain alternative tried (a 5-rule × 16-pass chain
-    # blew Janino compile to ~80 s and a 1-pattern × 16-pass chain
-    # still ran 6× slower end-to-end): the fold is one pass over the
-    # split segments, and the _normalize_ref guard keeps it off
-    # dot-free rows entirely.
-    segs = F.split(p, "/")  # leading '' is a poppable segment (CPython)
+    # A direct transcription of CPython's segment loop into an
+    # array-aggregate stack fold. The higher-order function keeps its
+    # projection out of whole-stage codegen (test_plans pins that it is
+    # the only such projection). The alternatives measured slower: a
+    # 5-rule × 16-pass regex chain blew Janino compile to ~80 s, and a
+    # 1-pattern × 16-pass chain ran 6× slower end to end. The fold is
+    # one pass over the split segments, and the _normalize_ref guard
+    # keeps it off dot-free rows entirely.
+    tailed = F.regexp_replace(p, r"(^|/)(\.\.?)\z", "$1$2/")
     folded = F.aggregate(
-        segs,
+        F.split(tailed, "/"),  # leading '' is a poppable segment (CPython)
         F.array().cast("array<string>"),
         lambda acc, s: (
             F.when(s == ".", acc)
@@ -225,66 +245,67 @@ def remove_dot_segments(p: Column) -> Column:
             .otherwise(F.concat(acc, F.array(s)))
         ),
     )
-    last = F.element_at(segs, -1)
-    folded = F.when(
-        last.isin(".", ".."), F.concat(folded, F.array(F.lit("")))
-    ).otherwise(folded)
-    joined = F.concat_ws("/", folded)
     # urlunparse re-roots the path when a netloc is present ('/../a'
     # pops the root, folds to 'a', and comes back as '/a'); an emptied
     # stack ('' here) re-roots to '/' the same way
-    return F.when(joined.startswith("/"), joined).otherwise(
-        F.concat(F.lit("/"), joined)
-    )
+    return F.regexp_replace(F.concat_ws("/", folded), "^(?!/)", "/")
+
+
+# A '/.' or '/..' segment that ends at '/', '?', '#' or the end of the
+# string, inside the path part (before the first '?' or '#').
+_DOT_SEGMENT = r"^[^?#]*/\.\.?([/?#]|\z)"
 
 
 def _normalize_ref(s: Column) -> Column:
     """Dot-segment normalization of a path(+query/fragment) reference.
-    Two-level guard: a cheap substring scan ('/.' anywhere) keeps the
-    dot-free common case out of the regexes entirely — codegen CASE
-    evaluates the expensive branch only for rows that pass."""
-    path_part = F.regexp_extract(s, r"^([^?#]*)", 1)
-    rest = F.regexp_replace(s, r"^[^?#]*", "")
-    return F.when(~s.contains("/."), s).otherwise(
-        F.when(
-            path_part.rlike(r"/\.\.?(/|$)"),
-            F.concat(remove_dot_segments(path_part), rest),
-        ).otherwise(s)
-    )
+    One guard, ``_DOT_SEGMENT``, keeps the dot-free common case out of
+    the fold. It is exact: it holds iff the path part has a '.' or '..'
+    segment, and ``remove_dot_segments`` leaves a '/'-rooted path that
+    has none unchanged, so a row it skips would have come back as
+    ``s``."""
+    return F.when(
+        s.rlike(_DOT_SEGMENT),
+        F.concat(
+            remove_dot_segments(F.regexp_extract(s, r"^([^?#]*)", 1)),
+            F.regexp_replace(s, r"^[^?#]*", ""),
+        ),
+    ).otherwise(s)
 
 
 def resolve_relative(url: Column, origin: Column) -> Column:
     """``SiteCrawler.urljoin`` (base.py:611-616): strip(), join against
     the origin with CPython's dot-segment removal on the path part,
     then ``unquote`` the WHOLE result. Only applied when the raw string
-    starts with '/' (check_urls, base.py:681-683)."""
+    starts with '/' (check_urls, base.py:681-683).
+
+    The expression is linear in size: the join picks the one string to
+    normalize (``ref``) before it normalizes, so the dot-segment fold
+    and the unquote each appear once in the tree. Exactness of the
+    routing: a '//netloc…' network-path reference (``^//[^/?#]``)
+    keeps the base scheme and, as in CPython, skips dot-segment
+    processing (urljoin returns urlunparse directly when the ref has a
+    netloc). Every other reference joins onto the origin: an EMPTY
+    netloc ('//', '///a', '//?q', '//#f') keeps the base netloc, so
+    ``ref`` drops the '//' and what follows it (path, query, fragment)
+    goes through the segment loop like any absolute-path reference.
+    The routing reads the stripped string ``t``, never the normalized
+    one: normalization can produce a '//'-leading path ('/.///b' →
+    '///b') that is still an absolute-PATH reference."""
     # The reference strips the raw string first (str.strip() — ALL
-    # whitespace incl. \x0b/\x0c/unicode, hence (?U)\s, not trim());
+    # whitespace incl. \x0b/\x0c/unicode, hence (?U)\s, not trim(),
+    # plus \x1c-\x1f, which str.isspace() counts and Java does not);
     # urlparse then strips ASCII tab/CR/LF anywhere before splitting
     # (bpo-43882); and urlunparse drops an empty query's '?' and an
     # empty fragment's '#' on the way back out. urljoin's output — and
     # therefore the reference's resolved URL — reflects all three.
-    t = F.regexp_replace(url, r"(?U)^\s+|\s+$", "")
+    t = F.regexp_replace(url, r"(?U)^[\s\x1c-\x1f]+|[\s\x1c-\x1f]+$", "")
     t = F.translate(t, "\t\r\n", "")
     t = F.regexp_replace(t, r"^([^#]*)#$", "$1")
     t = F.regexp_replace(t, r"^([^?#]*)\?(?=#|$)", "$1")
-    # branch routing MUST use the raw string: normalization can produce
-    # a '//'-leading path ('/.///b' → '///b') that is still an
-    # absolute-PATH reference, not a network-path reference.
-    # '//netloc/...' network-path references keep the base scheme and,
-    # per CPython, skip dot-segment processing entirely (urljoin
-    # returns urlunparse directly when the ref has a netloc); an EMPTY
-    # netloc ('//', '///a') keeps the base netloc and DOES normalize
-    # (it falls through to the segment loop).
-    new_netloc = F.regexp_extract(t, r"^//([^/?#]*)", 1)
-    after_netloc = F.regexp_replace(t, r"^//[^/?#]*", "")
-    t_ref = _normalize_ref(t)
-    an_ref = _normalize_ref(after_netloc)
-    joined = (
-        F.when(~t.startswith("//"), F.concat(origin, t_ref))
-        .when(new_netloc != "", F.concat(scheme(origin), F.lit(":"), t))
-        .otherwise(F.concat(origin, an_ref))
-    )
+    ref = F.regexp_replace(t, r"^//(?![^/?#])", "")
+    joined = F.when(
+        t.rlike(r"^//[^/?#]"), F.concat(scheme(origin), F.lit(":"), t)
+    ).otherwise(F.concat(origin, _normalize_ref(ref)))
     return F.when(is_relative_path(url), url_unquote(joined)).otherwise(url)
 
 
@@ -464,37 +485,67 @@ def domain_bucket(domain: Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(domain), F.lit(n_buckets)).cast("int")
 
 
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once. Catalyst has no
+    let-binding, so a Column used k times is copied k times; a
+    one-element ``transform`` binds it to a lambda variable instead.
+    The body then runs interpreted (a higher-order function is
+    ``CodegenFallback``), so use it only where that already happens or
+    where the copies cost more than the row work."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def canonicalize_full(url: Column, tracking_params: tuple[str, ...]) -> Column:
-    """North-rule canonicalizer: lowercase scheme+host, strip fragment,
+    r"""North-rule canonicalizer: lowercase scheme+host, strip fragment,
     elide the scheme-default port (RFC 3986 §6.2.3 — ':80' under http,
     ':443' under https; any other port is identity-preserved), strip
     tracking params, normalize trailing slash on non-root paths.
     Parity mode (the default) bypasses this — the reference rejects
-    fragment URLs instead of stripping them (SURVEY.md §2.2 note)."""
-    base = strip_fragment(url)
-    sch, nl, p, q = scheme(base), netloc(base), path(base), query(base)
-    host_lc = F.lower(nl)
-    host_lc = (
-        F.when(sch == "http", F.regexp_replace(host_lc, ":80$", ""))
-        .when(sch == "https", F.regexp_replace(host_lc, ":443$", ""))
-        .otherwise(host_lc)
-    )
-    p_norm = F.when(p == "/", p).otherwise(F.regexp_replace(p, "/$", ""))
+    fragment URLs instead of stripping them (SURVEY.md §2.2 note).
+
+    ``url`` is bound once (``_let``), and so are its four parts, so the
+    caller's expression (admission's whole resolve, dot-segment fold
+    included) is not copied once per use. Anchors are ``\z``: Java's
+    ``$`` also matches before a final U+0085/U+2028/U+2029, which an
+    unquoted URL can end in."""
     tracked = F.lit(list(tracking_params))
-    q_kept = F.when(
-        q != "",
-        F.array_join(
+
+    def parts(u: Column) -> Column:
+        base = strip_fragment(u)
+        return F.struct(
+            scheme(base).alias("s"),
+            netloc(base).alias("n"),
+            _part(base, 3).alias("p"),
+            query(base).alias("q"),
+        )
+
+    def rebuild(c: Column) -> Column:
+        sch, raw_path = c["s"], c["p"]
+        host_lc = F.lower(c["n"])
+        host_lc = (
+            F.when(sch == "http", F.regexp_replace(host_lc, r":80\z", ""))
+            .when(sch == "https", F.regexp_replace(host_lc, r":443\z", ""))
+            .otherwise(host_lc)
+        )
+        # path() over the bound parts; then one trailing '/' goes,
+        # except from the root path '/'
+        p = F.when(
+            sch.isin(*_USES_PARAMS), F.regexp_replace(raw_path, ";[^/]*$", "")
+        ).otherwise(raw_path)
+        p_norm = F.regexp_replace(p, r"(?s)(?<=.)/\z", "")
+        # an empty query splits to [''] and joins back to ''
+        q_kept = F.array_join(
             F.filter(
-                F.split(q, "&"),
+                F.split(c["q"], "&"),
                 lambda kv: ~F.array_contains(tracked, F.substring_index(kv, "=", 1)),
             ),
             "&",
-        ),
-    ).otherwise(F.lit(""))
-    rebuilt = F.concat(
-        F.when(sch != "", F.concat(sch, F.lit("://"))).otherwise(F.lit("")),
-        host_lc,
-        p_norm,
-        F.when(q_kept != "", F.concat(F.lit("?"), q_kept)).otherwise(F.lit("")),
-    )
-    return rebuilt
+        )
+        return F.concat(
+            F.when(sch != "", F.concat(sch, F.lit("://"))).otherwise(F.lit("")),
+            host_lc,
+            p_norm,
+            F.regexp_replace(q_kept, r"(?s)^(?=.)", "?"),
+        )
+
+    return _let(_let(url, parts), rebuild)

@@ -55,14 +55,15 @@ def gather_filter(candidates: DataFrame, config: CrawlConfig, url_col: str = "ur
 
 
 # Constructed-expression cache. Building the admission Column tree is
-# pure driver-side py4j traffic (the resolve_relative HOF fold alone is
-# thousands of JVM calls) and measured 2-5 s per admit() call — which
-# the wave loop pays EVERY wave even though the tree is identical for a
-# given config. Column objects are immutable name-referencing
-# expression trees, safe to reuse across DataFrames/plans, so we build
-# them once per (SparkContext, config-surface, refresh) key. The only
-# per-call variation — the allow_home gate — is injected as a cheap
-# ``__home_allowed`` boolean column the cached tree references by name.
+# driver-side py4j traffic, identical for a given config, so we build
+# it once per (SparkContext, config-surface, refresh) key. Column
+# objects are immutable name-referencing expression trees, safe to
+# reuse across DataFrames/plans. The only per-call variation — the
+# allow_home gate — is injected as a cheap ``__home_allowed`` boolean
+# column the cached tree references by name. The cache saves only the
+# build: analysis, optimization and per-task code generation still
+# scale with the tree's size on every call, which is why the resolve
+# expression is kept linear (test_plans pins one fold).
 _EXPR_CACHE: dict[tuple, dict[str, Column]] = {}
 
 
@@ -153,12 +154,13 @@ def _admit_exprs(config: CrawlConfig, refresh: bool) -> dict[str, Column]:
         filtered = filtered | _rlike_any(url, config.ignore_url_regexes)
 
     # P2 resolution; in canonicalize="full" mode the north-rule
-    # canonicalizer composes INTO the same expression, so its
-    # higher-order filter stays inside the one already-isolated
-    # non-codegen projection (test_plans' plan-shape pin holds for
-    # both modes). Fragments are then stripped before the predicate
-    # chain, so the parity 'fragment' rejection never fires — stripped,
-    # not rejected, exactly the URLManager-mode contract.
+    # canonicalizer composes INTO the same expression, binding the
+    # resolved URL once, so its higher-order functions stay inside the
+    # one already-isolated non-codegen projection (test_plans'
+    # plan-shape pin holds for both modes). Fragments are then
+    # stripped before the predicate chain, so the parity 'fragment'
+    # rejection never fires — stripped, not rejected, exactly the
+    # URLManager-mode contract.
     resolve = U.resolve_relative(F.col("url_raw"), F.lit(origin_lit))
     if config.ignore_queries:
         # the reference's dead `ignore_queries` Meta option, enforced:

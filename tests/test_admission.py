@@ -187,6 +187,28 @@ def test_image_filter(spark):
     assert reasons["http://example.com/img/a.jpg"] == "image"
 
 
+def test_image_filter_decodes_past_a_malformed_escape(spark):
+    """``unquote_plus`` keeps a malformed '%zz' literal and still
+    decodes '%2E', so the oracle's ``_is_image`` sees '/x%zz/img.png'
+    and rejects an image; a decode that gives up on the whole string
+    sees the suffix-less 'img%2Epng' and admits it as valid."""
+    config = CrawlConfig(start_urls=["http://site0.test/"], ignore_images=True)
+    urls = [
+        "http://site0.test/x%zz/img%2Epng",
+        "http://site0.test/x%2/img%2Ejpg?w=1",
+        "/rel%zz/pic%2Egif",
+        "http://site0.test/x%zz/page",
+    ]
+    ev, ek, reasons, ov, ok, state = run_both(spark, urls, config, allow_home=False)
+    assert ev == ov == {"http://site0.test/x%zz/page"}
+    assert ek == ok
+    assert reasons["http://site0.test/x%zz/img%2Epng"] == "image"
+    assert reasons["http://site0.test/x%2/img%2Ejpg?w=1"] == "image"
+    assert reasons["http://site0.test/rel%zz/pic.gif"] == "image"
+    for u, reason in reasons.items():
+        assert state.reject_reasons.get(u) == reason, u
+
+
 def test_filter_cardinality_audit(spark):
     config = CrawlConfig(start_urls=["http://example.com/"], ignore_images=True)
     urls = [

@@ -116,6 +116,30 @@ def test_admission_is_map_only_no_shuffle(spark):
     assert len(codegen_spans) == 2, codegen_spans
 
 
+def test_admission_resolve_expression_is_linear(spark):
+    """Catalyst has no let-binding: a Column used k times is copied k
+    times, and nested helpers multiply the copies. Admission's resolve
+    expression must hold ONE dot-segment fold and a few dozen regex
+    nodes, or every admit() pays for the copies in analysis, in every
+    (AQE re-)plan and in per-task source generation of its
+    non-whole-stage-codegen projection. Built by analysis only: no
+    Spark job runs."""
+    start = ["http://site0.test/"]
+    sizes = {}
+    for mode in ("parity", "full"):
+        config = CrawlConfig(start_urls=start, canonicalize=mode)
+        resolve = admission._admit_exprs(config, False)["resolve"]
+        df = spark.range(1).select(F.lit("/a").alias("url_raw")).select(resolve.alias("r"))
+        tree = df._jdf.queryExecution().analyzed().toString()
+        sizes[mode] = (len(tree), tree.count("aggregate("), tree.count("regexp_"))
+    chars, folds, regexes = sizes["parity"]
+    assert folds == 1, sizes
+    assert regexes <= 40, sizes
+    full_chars, full_folds, _ = sizes["full"]
+    assert full_folds == 1, sizes
+    assert full_chars <= 2 * chars, sizes
+
+
 def _toy_frontier(spark, n=1000, n_domains=5):
     return spark.range(n).select(
         F.concat(F.lit("http://site"), (F.col("id") % n_domains), F.lit(".test/p-"), F.col("id")).alias("url"),

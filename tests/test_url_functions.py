@@ -120,7 +120,12 @@ def test_is_image_matches_reference_semantics(spark):
 
 
 def test_unquote_parity(spark):
-    cases = ["/a%20b", "/a+b", "/a%2Bb", "/caf%C3%A9", "/plain"]
+    # urllib keeps a '%' that opens no two-ASCII-hex-digit escape as a
+    # literal and still decodes every valid escape around it
+    cases = ["/a%20b", "/a+b", "/a%2Bb", "/caf%C3%A9", "/plain",
+             "/a%20b%zz", "/caf%C3%A9%2", "/%", "/%%41", "/%+1", "/%-1",
+             "/a+b%zz", "/%G0%41", "/%\u0663\u0663", "/%\uff21\uff21%41",
+             "/x%zz/img%2Epng", "/%25zz"]
     df = spark.createDataFrame([(u,) for u in cases], "u string")
     got = {
         r["u"]: (r["unq"], r["form"])
@@ -150,6 +155,44 @@ def test_resolve_relative(spark):
     for u in cases:
         expected = unquote(urljoin(origin, u.strip())) if u.startswith("/") else u
         assert got[u] == expected, u
+
+
+def test_resolve_relative_differential(spark):
+    """resolve_relative against the reference's
+    ``unquote(urljoin(origin, u.strip()))`` over the splitter's fuzz
+    corpus rooted at '/', malformed escapes, empty-netloc and
+    network-path '//' references, and the line terminators Java's
+    ``$`` treats specially (U+0085, U+2028, U+2029) before '?', '#',
+    after a dot segment and at the end."""
+    from urllib.parse import urljoin
+
+    from tests.test_url_parse_property import gen_urls
+
+    origin = "http://x.test"
+    rooted = ["/" + u.lstrip("/") for u in gen_urls(300, seed=11)]
+    cases = rooted + [
+        "/a%20b%zz", "/caf%C3%A9%2", "/%zz/../b", "/a/%2/./c?q=%",
+        "/%+1", "/%\u0663\u0663", "/a+b%zz",
+        "//", "///", "//?q", "//#f", "//?#", "///a/./b", "///../a",
+        "//h/a/../b", "//h", "//h?q#f", "//h/%41%zz", "//./a",
+        "/a/..\u0085?q", "/a/..\u2028?q", "/a/.\u2028", "/a/..\u2029",
+        "/a/..\u2028", "/a\u0085", "/a/\u2028#f", "/a/..\u2028/b",
+        "/a/b/.\u0085/c", "/a?\u2028", "/a#\u2028", "\u2028/a/..",
+        "/a/\x1c", "/a/..\x1f", "/a/%E2%80%A8/..",
+    ]
+    df = spark.createDataFrame([(c,) for c in cases], "u string")
+    got = {
+        r["u"]: r["res"]
+        for r in df.select(
+            "u", U.resolve_relative(F.col("u"), F.lit(origin)).alias("res")
+        ).collect()
+    }
+    bad = {}
+    for c in cases:
+        want = unquote(urljoin(origin, c.strip())) if c.startswith("/") else c
+        if got[c] != want:
+            bad[c] = (got[c], want)
+    assert not bad, dict(list(bad.items())[:10])
 
 
 def test_registrable_domain_and_bucket(spark):
@@ -248,6 +291,15 @@ def test_canonicalize_full(spark):
         ("HTTPS://a.Test:443/", "https://a.test/"),
         ("http://a.test:8080/p", "http://a.test:8080/p"),
         ("https://a.test:80/p", "https://a.test:80/p"),
+        # end-of-string anchors: Java's '$' would also match before a
+        # final U+2028/U+0085, which an unquoted netloc or path can end in
+        ("http://a.test:80\u2028/p", "http://a.test:80\u2028/p"),
+        ("https://a.test:443\u0085/p", "https://a.test:443\u0085/p"),
+        ("http://a.test/p/\u2028", "http://a.test/p/\u2028"),
+        ("http://a.test/p/\u2028/", "http://a.test/p/\u2028"),
+        ("http://a.test//", "http://a.test/"),
+        ("http://a.test?utm_source=x", "http://a.test"),
+        ("http://a.test/?", "http://a.test/"),
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], "u string")
     got = {
